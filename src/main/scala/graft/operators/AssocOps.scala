@@ -324,44 +324,17 @@ object AssocOps {
     */
   private[graft] def entityClustersOf(
       s: SparkSession, p: DataFrame,
-      maxDist: Int, rounds: Int): DataFrame = {
-    val pairs = windowedBlockPairs(p, EntityWindow)
-      .filter(levenshtein(col("name_l"), col("name_r")) <= maxDist)
-      .select(col("src"), col("dst"))
-    val edges = pairs
-      .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The match-edge frame here is TINY (windowed blocking keeps it a few
-    // K rows at sf0.1), so the loop deliberately carries NO broadcast
-    // hints: a forced per-round broadcast build is an extra blocking
-    // driver job per round, and with frames this small the unhinted plan
-    // (planner/AQE picks the build side from real cached-edge stats) is
-    // measurably cheaper — an A/B with roundSide hints measured the whole
-    // entity family ~2× slower (2.98 → 5.5 s at sf0.1).
-    var lab = edges.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node"))
-    for (_ <- 1 to rounds) {
-      val relaxed = edges
-        .join(lab.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), col("lab"))
-      lab = GraphOps.truncate(s, lab.union(relaxed)
-        .groupBy("node").agg(min("lab").as("lab")))
-    }
-    lab.groupBy(col("lab").as("entity"))
-      .agg(
-        count(lit(1)).as("n_members"),
-        min("node").as("key_lo"),
-        max("node").as("key_hi"))
-      .orderBy("entity")
-  }
+      maxDist: Int, rounds: Int): DataFrame =
+    // Tiny match-edge frame: no join hints ([[MinLabel]]).
+    entitySummary(MinLabel.fixed(s, matchEdges(p, maxDist), "node", "lab",
+      rounds, sizeGuard = false))
 
   /** Convergence-checked entity resolution — the [[entityClusters]] twin
-    * that iterates min-label propagation until NO label changes (one
-    * cached-data filter per round, the
-    * [[GraphOps.connectedComponentsConverged]] stopping shape), instead
-    * of the fixed 4 rounds. The fixed-round form under-merges any match
-    * chain needing more than 4 propagation hops from its minimum label —
-    * invisible to its own gate because the oracle mirrors the rounds.
+    * that iterates min-label propagation until NO label changes
+    * ([[MinLabel.converged]]), instead of the fixed 4 rounds. The
+    * fixed-round form under-merges any match chain needing more than 4
+    * propagation hops from its minimum label — invisible to its own gate
+    * because the oracle mirrors the rounds.
     * This twin's oracle is an unrolled chain with generous headroom
     * (default 20 rounds vs the measured ≤4 at gate SFs): min-label
     * propagation is a stable fixpoint, so extra oracle rounds are
@@ -382,56 +355,31 @@ object AssocOps {
   private[graft] def entityClustersConvergedOf(
       s: SparkSession, p: DataFrame,
       maxDist: Int, maxIters: Int): (Int, DataFrame) = {
+    val edges = matchEdges(p, maxDist)
+    val (rounds, lab) = MinLabel.converged(s, edges, "node", "lab",
+      maxIters, sizeGuard = false)
+    edges.unpersist(false)
+    (rounds, entitySummary(lab))
+  }
+
+  /** Symmetrized, cached `(src, dst)` match edges of the windowed blocks. */
+  private def matchEdges(p: DataFrame, maxDist: Int): DataFrame = {
     val pairs = windowedBlockPairs(p, EntityWindow)
       .filter(levenshtein(col("name_l"), col("name_r")) <= maxDist)
       .select(col("src"), col("dst"))
-    val edges = pairs
+    pairs
       .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // No broadcast hints in this loop — see [[entityClustersOf]]: the
-    // match-edge frame is tiny, and forced per-round broadcast builds
-    // measured the converged twin ~2× slower than the unhinted plan.
-    var lab = GraphOps.truncate(s,
-      edges.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")))
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      iter += 1
-      val relaxed = edges
-        .join(lab.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min("lab").as("nbr"))
-      // Carry the previous label through the truncated frame so the
-      // changed-label check is a filter over cached data.
-      // Pointer jump (shortcutting, the Rastogi et al. 2013 hash-to-min
-      // family) fused into the same round: lab ← min(neighbor-min,
-      // PREVIOUS round's lab(lab)), chased [[GraphOps.JumpDepth]] steps
-      // through the prior round's already-materialized frame
-      // ([[GraphOps.staleJumps]]) — still one checkpoint per round (the
-      // per-round wall cost here IS the checkpoint job; see the
-      // percolation twin), with the deeper chase bounding the r16
-      // exp-0.79 watch item's round growth on sf1's longer match
-      // chains. Final labels unchanged (the cluster min); convergence
-      // is detected on the full combined round.
-      val next = GraphOps.truncate(s, GraphOps.staleJumps(lab
-        .join(relaxed, Seq("node"), "left")
-        .select(
-          col("node"),
-          least(col("lab"), coalesce(col("nbr"), col("lab"))).as("lab"),
-          col("lab").as("prev_lab")),
-        lab, None, "node", "lab"))
-      converged = next.filter(col("lab") =!= col("prev_lab")).isEmpty
-      lab = next.select("node", "lab")
-    }
-    edges.unpersist(false)
-    (iter, lab.groupBy(col("lab").as("entity"))
+  }
+
+  /** One row per entity: its label, member count and key range. */
+  private def entitySummary(lab: DataFrame): DataFrame =
+    lab.groupBy(col("lab").as("entity"))
       .agg(
         count(lit(1)).as("n_members"),
         min("node").as("key_lo"),
         max("node").as("key_hi"))
-      .orderBy("entity"))
-  }
+      .orderBy("entity")
 
   /** DuckDB oracle for [[entityClusters]]: blocked match edges + the
     * same unrolled min-label rounds (bfs-oracle carry shape).

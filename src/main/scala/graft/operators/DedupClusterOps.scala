@@ -13,8 +13,7 @@ import graft.Tables
   *
   * The pair stage is the exact inverted-index n-gram Jaccard
   * ([[MinHashOps.ngramJaccardPairs]]); clustering is min-label propagation
-  * over the symmetrized pair graph — the same distributed shape as
-  * [[GraphOps.connectedComponents]], reused here because duplicate
+  * over the symmetrized pair graph ([[MinLabel]]), because duplicate
   * clusters are NOT just the pairs: A~B and B~C puts A,B,C in one cluster
   * even when (A,C) never passed the threshold.
   *
@@ -22,11 +21,10 @@ import graft.Tables
   * appear in >= 1 near-dup pair — a small fraction of the corpus — and
   * every shuffle carries (id, label) longs. Duplicate-cluster diameters
   * are short in practice (dup clusters are near-cliques because Jaccard
-  * is transitive-ish at 0.6+); the fixed round count keeps the output
-  * oracle-checkable, and both sides run the identical unrolled algorithm
-  * so outputs match at any round count. For adversarial chain-shaped
-  * corpora, [[GraphOps.connectedComponentsConverged]]'s stopping shape
-  * applies unchanged.
+  * is transitive-ish at 0.6+), but the registered entries run
+  * [[clustersConverged]], which iterates to the fixpoint and so also
+  * covers adversarial chain-shaped corpora; the fixed-round [[clusters]]
+  * is the bounded twin the specs compare it against.
   */
 object DedupClusterOps {
 
@@ -48,13 +46,9 @@ object DedupClusterOps {
     * Keys include a CONTENT TOKEN (per-file name+size+mtime of the
     * documents table), so regenerating the table at the same path within
     * one JVM invalidates naturally instead of serving stale labels.
-    * Files land under `graft.labelstore.dir` (falling back to
-    * `graft.checkpoint.dir`, then java.io.tmpdir) — set one of the confs
-    * in any long-lived deployment so a tmp-reaper can't collect a label
-    * artifact mid-session.
+    * The store directory is a [[ParquetStore]].
     */
-  private val labelStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val labelStore = new ParquetStore("graft-dedup-labels")
 
   /** The converged cluster labels for `dir`'s documents table, computed
     * at most once per (dir contents, threshold) and served from the
@@ -63,27 +57,12 @@ object DedupClusterOps {
     */
   def convergedLabels(
       s: SparkSession, dir: String,
-      thresholdMilli: Int = Threshold): DataFrame = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#" + thresholdMilli + "#" + Tables.contentToken(dir, "documents")
-    val path = labelStore.computeIfAbsent(key, _ => {
-      val base = s.conf.getOption("graft.labelstore.dir")
-        .orElse(s.conf.getOption("graft.checkpoint.dir"))
-        .map { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, "graft-dedup-labels")
-        }
-        .getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-dedup-labels"))
-        .toString
+      thresholdMilli: Int = Threshold): DataFrame =
+    labelStore(s, dir,
+      "#" + thresholdMilli + "#" + Tables.contentToken(dir, "documents")) {
       clustersConverged(s, Tables.documents(s, dir), thresholdMilli,
         pairsIn = Some(storePairs(s, dir, thresholdMilli)))._2
-        .write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** Per-document cluster assignment for every document in >= 1 near-dup
     * pair: `(doc_id, cluster, is_survivor)` where `cluster` is the
@@ -101,40 +80,8 @@ object DedupClusterOps {
     val pairs = MinHashOps.ngramJaccardPairs(docs, thresholdMilli,
         dfCap = Some(MinHashOps.defaultDfCap(docs.count())))
       .select(col("doc_a"), col("doc_b"))
-    val sym = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("src").as("doc_id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar: sizes the broadcast guard
-
-    var labels = nodes.withColumn("cluster", col("doc_id"))
-    for (i <- 1 to iters) {
-      // Size-guarded broadcast of the label frame (GraphOps.roundSide):
-      // the cached pair graph is never re-shuffled across rounds. The
-      // carry is one min-combine over the union of the old labels and
-      // the propagated pair rows (the [[GraphOps.connectedComponents]]
-      // round shape) — one aggregation exchange, no join back.
-      val propagated = sym
-        .join(GraphOps.roundSide(labels.withColumnRenamed("doc_id", "src"), n), "src")
-        .select(col("dst").as("doc_id"), col("cluster"))
-      labels = labels.union(propagated)
-        .groupBy("doc_id").agg(min("cluster").as("cluster"))
-      // Same 2^iters plan re-expansion as connectedComponents: each level
-      // references the previous labels twice; truncate keeps it linear.
-      labels = GraphOps.narrowTruncate(s, labels, n)
-    }
-    // The final labels are truncated, so the pair-graph caches are no
-    // longer reachable from the returned plan — release them here
-    // instead of leaking them into a long-lived session.
-    sym.unpersist(false); nodes.unpersist(false)
-    labels
-      .select(
-        col("doc_id"),
-        col("cluster"),
-        (col("doc_id") === col("cluster")).cast("long").as("is_survivor"))
-      .orderBy("doc_id")
+    withSurvivor(MinLabel.fixed(s, symmetrized(pairs), "doc_id", "cluster",
+      iters, sizeGuard = true))
   }
 
   /** Registered-query entry over the `documents` table: the convergence-
@@ -160,17 +107,10 @@ object DedupClusterOps {
       .filter(col("jaccard_milli") >= thresholdMilli)
       .select(col("doc_a"), col("doc_b"))
 
-  /** Fixed-iteration entry (kept for callers that need a bounded round
-    * count; pairs with [[oracleSql]]'s identical unrolled formulation).
-    */
-  def dedupClustersFixed(s: SparkSession, dir: String): DataFrame =
-    clusters(s, Tables.documents(s, dir))
-
-  /** Convergence-checked clustering: iterate until no label changes (one
-    * scalar action per round, the [[GraphOps.connectedComponentsConverged]]
-    * stopping shape) — the 100×-scale-safe mode for adversarial
-    * chain-shaped dup clusters, where a fixed round count would silently
-    * stop propagating. Returns (rounds run, same schema as [[clusters]]).
+  /** Convergence-checked clustering ([[MinLabel.converged]]) — the
+    * 100×-scale-safe mode for adversarial chain-shaped dup clusters, where
+    * a fixed round count would silently stop propagating. Returns (rounds
+    * run, same schema as [[clusters]]).
     */
   def clustersConverged(
       s: SparkSession,
@@ -188,54 +128,29 @@ object DedupClusterOps {
       MinHashOps.ngramJaccardPairs(docs, thresholdMilli,
         dfCap = Some(MinHashOps.defaultDfCap(docs.count()))))
       .select(col("doc_a"), col("doc_b"))
-    val sym = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val sym = symmetrized(pairs)
+    val (rounds, labels) = MinLabel.converged(s, sym, "doc_id", "cluster",
+      maxIters, sizeGuard = true)
+    sym.unpersist(false)
+    (rounds, withSurvivor(labels))
+  }
+
+  /** Both directions of every `(doc_a, doc_b)` pair, cached for the loop. */
+  private def symmetrized(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("src").as("doc_id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar: sizes the broadcast guard
-    var labels = GraphOps.narrowTruncate(s,
-      nodes.withColumn("cluster", col("doc_id")), n)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      iter += 1
-      val nbrMin = sym
-        .join(GraphOps.roundSide(labels.withColumnRenamed("doc_id", "src"), n), "src")
-        .groupBy(col("dst").as("doc_id"))
-        .agg(min("cluster").as("nbr"))
-      // Carry the previous label through the truncated frame so the
-      // changed-label check is a filter over cached data, not a
-      // per-round shuffle join of two node-sized frames (the
-      // [[GraphOps.connectedComponentsConverged]] stopping shape) —
-      // plus the fused stale pointer jump (cluster ← min(neighbor-min,
-      // previous round's cluster(cluster)), chased
-      // [[GraphOps.JumpDepth]] steps via [[GraphOps.staleJumps]]; see
-      // [[GraphOps.percolationAudit]]): dup clusters are mostly dense
-      // cliques that converge in a few rounds anyway, but the jump
-      // bounds the adversarial chain-shaped case this converged twin
-      // exists for at ~log(chain) rounds, one checkpoint per round.
-      val next = GraphOps.narrowTruncate(s, GraphOps.staleJumps(labels
-        .join(GraphOps.roundSide(nbrMin, n), Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          least(col("cluster"), coalesce(col("nbr"), col("cluster"))).as("cluster"),
-          col("cluster").as("prev_cluster")),
-        labels, Some(n), "doc_id", "cluster"), n)
-      converged = next.filter(col("cluster") =!= col("prev_cluster")).isEmpty
-      labels = next.select("doc_id", "cluster")
-    }
-    // Labels are truncated every round; once the loop exits the pair
-    // graph is unreachable from the returned plan — release its caches.
-    sym.unpersist(false); nodes.unpersist(false)
-    (iter, labels
+
+  /** `(doc_id, cluster, is_survivor)` ordered by doc: the survivor is the
+    * cluster's minimum member.
+    */
+  private def withSurvivor(labels: DataFrame): DataFrame =
+    labels
       .select(
         col("doc_id"),
         col("cluster"),
         (col("doc_id") === col("cluster")).cast("long").as("is_survivor"))
-      .orderBy("doc_id"))
-  }
+      .orderBy("doc_id")
 
   /** Shared oracle prefix: exact n-gram Jaccard pairs (same CTEs as the
     * `dedup_ngram` oracle), symmetrized, plus the node set.
@@ -268,32 +183,6 @@ object DedupClusterOps {
        |SELECT doc_id, min(r) AS cluster,
        | CAST(doc_id = min(r) AS BIGINT) AS is_survivor
        |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** DuckDB oracle: the identical pipeline — exact n-gram Jaccard pairs
-    * (same CTEs as the `dedup_ngram` oracle), then the identical unrolled
-    * min-label propagation (MATERIALIZED per level, as in
-    * [[GraphOps.connectedComponentsOracleSql]] — each level references the
-    * previous one twice and plain CTE inlining would re-expand 2^iters).
-    */
-  def oracleSql(thresholdMilli: Int = Threshold, iters: Int = Iters): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH${pairGraphSql(thresholdMilli)},
-         |l0 AS MATERIALIZED (SELECT doc_id, doc_id AS cluster FROM n0)""".stripMargin)
-    for (i <- 1 to iters) {
-      sb.append(s""",
-         |l$i AS MATERIALIZED (
-         | SELECT n.doc_id, least(n.cluster, coalesce(m.nbr, n.cluster)) AS cluster
-         | FROM l${i - 1} n LEFT JOIN (
-         |  SELECT e.dst AS doc_id, min(p.cluster) AS nbr
-         |  FROM sym e JOIN l${i - 1} p ON e.src = p.doc_id
-         |  GROUP BY e.dst) m ON n.doc_id = m.doc_id)""".stripMargin)
-    }
-    sb.append(s"""
-       |SELECT doc_id, cluster, CAST(doc_id = cluster AS BIGINT) AS is_survivor
-       |FROM l$iters ORDER BY doc_id""".stripMargin)
-    sb.toString
-  }
 
   /** Dedup byte-savings readout per source: the chars and docs that
     * near-dup clustering ([[clustersConverged]], keep-min-id survivor)

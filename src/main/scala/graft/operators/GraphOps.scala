@@ -57,45 +57,6 @@ object GraphOps {
   private[operators] def roundSide(df: DataFrame, n: Long): DataFrame =
     if (n <= BroadcastNodeLimit) broadcast(df) else df
 
-  /** Stale-jump depth for the converged min-label loops: how many times a
-    * round chases `label ← stale(label)` through the PREVIOUS round's
-    * already-materialized label frame. Measured on the percolation loop at
-    * sf0.01: depth 0 = 24 rounds, depth 1 = 15, depths 2 and 3 = 15 — the
-    * jumped-every-round stale forest stays ~2 deep by induction, so one
-    * chase per round already reaches its root and deeper chases are pure
-    * per-round join overhead. Depth 1 is the whole win.
-    */
-  private[graft] val JumpDepth = 1
-
-  /** Apply [[JumpDepth]]-deep fused stale pointer jumps: for each of
-    * `jumps` steps, `cur`'s `lab` column is replaced by
-    * `min(lab, stale_lab(lab))`, joining through the previous round's
-    * materialized `(key, lab)` frame `stale`. All other columns of `cur`
-    * (e.g. the carried prev-label) pass through untouched. Correctness:
-    * every stale label is an id of the SAME component (the min-label
-    * invariant), so jumping stays in-component and only decreases the
-    * label toward the component min — the fixpoint (and thus the gated
-    * output) is unchanged, and a no-change round of the COMBINED operator
-    * implies a no-change round of plain propagation (min(lab, nbr) = lab
-    * for every node), so convergence detection is still exact.
-    * `n = Some(count)` size-guards the jump side like every other
-    * per-round frame; `None` leaves join strategy to AQE (the
-    * entity-clusters loop style).
-    */
-  private[graft] def staleJumps(
-      cur: DataFrame, stale: DataFrame, n: Option[Long],
-      key: String, lab: String, jumps: Int = JumpDepth): DataFrame = {
-    val js0 = stale.select(col(key).as("__jn"), col(lab).as("__jl"))
-    val js = n.map(roundSide(js0, _)).getOrElse(js0)
-    var out = cur
-    for (_ <- 1 to jumps) {
-      out = out.join(js, out(lab) === col("__jn"), "left")
-        .withColumn(lab, least(col(lab), coalesce(col("__jl"), col(lab))))
-        .drop("__jn", "__jl")
-    }
-    out
-  }
-
   /** Checkpoint a node-sized loop frame NARROW: when the frame sits
     * inside the broadcast guard (n ≤ [[BroadcastNodeLimit]]) its next use
     * is a broadcast build anyway, so 32-way task fan-out on a 10^4-row
@@ -206,32 +167,17 @@ object GraphOps {
     * the direct-run `graph_degrees` entry ([[degrees]] bypasses the
     * store); content-token keying invalidates on table rewrite.
     */
-  private val edgeStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val edgeStore = new ParquetStore("graft-edge-store")
 
   def edges(s: SparkSession, dir: String): DataFrame = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#edges#" + Tables.contentToken(dir, "lineitem")
-    val path = edgeStore.computeIfAbsent(key, _ => {
-      val base = s.conf.getOption("graft.labelstore.dir")
-        .orElse(s.conf.getOption("graft.checkpoint.dir"))
-        .map { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, "graft-edge-store")
-        }
-        .getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-edge-store"))
-        .toString
-      edgesDirect(s, dir).write.mode("overwrite").parquet(base)
-      base
-    })
+    val stored = edgeStore(s, dir,
+      "#edges#" + Tables.contentToken(dir, "lineitem"))(edgesDirect(s, dir))
     // The store's small files pack into 1-2 scan splits under the 128 MB
     // split size, which would serialize every downstream narrow stage
     // (the Tables.parallelized hazard, measured as regressions on the
     // per-round edge-join loops) — re-fan the scan to the session's
     // parallelism; consumers that need a keyed layout repartition anyway.
-    Tables.parallelized(s.read.parquet(path))
+    Tables.parallelized(stored)
   }
 
   /** Symmetrized directed edge list (both directions of every undirected
@@ -577,91 +523,37 @@ object GraphOps {
     (iter, scores.select(col("node"), col("score").as("score_fp")).orderBy("node"))
   }
 
-  /** Connected components by min-label propagation: every node starts
-    * labeled with its own id and repeatedly takes the minimum label among
-    * itself and its neighbors. All-integer, so each iteration is exact;
+  /** Connected components by min-label propagation ([[MinLabel.fixed]]):
     * after `iters` rounds labels are correct for any component of
     * diameter <= iters (the co-purchase graph's diameter is ~3). The
     * oracle runs the identical unrolled algorithm, so outputs match even
     * for hypothetical not-yet-converged nodes.
     */
-  def connectedComponents(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    // Cache layout keyed to the loop's aggregation (see [[pagerank]]).
-    val dirEdges = directedEdges(s, dir).repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar: sizes the broadcast guard
-    var labels = nodes.withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      // Size-guarded broadcast of the label frame: the cached edge frame
-      // is never re-shuffled across rounds (see [[roundSide]]). The
-      // carry is one min-combine over the union of the old labels and
-      // the propagated edge rows — NOT a relax-aggregate plus a join
-      // back: the union reuses the aggregation exchange (map-side
-      // combined), the same round shape as [[bfsHops]].
-      val propagated = dirEdges
-        .join(roundSide(labels.withColumnRenamed("node", "src"), n), "src")
-        .select(col("dst").as("node"), col("label"))
-      labels = labels.union(propagated)
-        .groupBy("node").agg(min("label").as("label"))
-      // Each level references the previous labels twice and Spark does
-      // not share common subplans across joins, so an unchecked chain
-      // re-expands 2^iters times (same blowup the DuckDB oracle hit
-      // before MATERIALIZED). Checkpointing the tiny per-node frame
-      // every round keeps the plan linear.
-      if (i < iters) labels = narrowTruncate(s, labels, n)
-    }
-    labels.orderBy("node")
-  }
+  def connectedComponents(s: SparkSession, dir: String, iters: Int = 5): DataFrame =
+    MinLabel.fixed(s, componentEdges(s, dir), "node", "label", iters,
+      sizeGuard = true).orderBy("node")
 
-  /** Convergence-checked connected components: iterate min-label
-    * propagation until no label changes — one scalar `count` action per
-    * round, mirroring [[pagerankConverged]]'s stopping shape. The fixed-
-    * iteration [[connectedComponents]] stays as the oracle-checked entry;
-    * this is the 100×-scale-safe mode, where the diameter is not bounded
-    * by today's measurement and a fixed round count would silently stop
-    * propagating labels with no error. Returns (rounds run, labels); the
-    * round count is propagation rounds + 1 (the final round that observes
-    * zero changes).
+  /** Convergence-checked connected components ([[MinLabel.converged]]).
+    * The fixed-iteration [[connectedComponents]] stays as the
+    * oracle-checked entry; this is the 100×-scale-safe mode, where the
+    * diameter is not bounded by today's measurement. Returns (rounds run,
+    * labels).
     */
   def connectedComponentsConverged(
       s: SparkSession,
       dir: String,
       maxIters: Int = 50): (Int, DataFrame) = {
-    // Cache layout keyed to the loop's aggregation (see [[pagerank]]).
-    val dirEdges = directedEdges(s, dir).repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar: sizes the broadcast guard
-    var labels = narrowTruncate(s, nodes.withColumn("label", col("node")), n)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      iter += 1
-      val neighborMin = dirEdges
-        .join(roundSide(labels.withColumnRenamed("node", "src"), n), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min("label").as("nbr_label"))
-      // Carry the previous label through the truncated frame so the
-      // changed-label check is a filter over cached data, not a
-      // per-round shuffle join of two node-sized frames — plus the
-      // [[JumpDepth]]-deep fused stale pointer jump ([[staleJumps]]):
-      // same single checkpoint per round, ~log-bounded round count on
-      // chain-shaped components (the 100×-scale case this converged
-      // mode exists for).
-      val next = narrowTruncate(s, staleJumps(labels
-        .join(roundSide(neighborMin, n), Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          col("label").as("prev_label")),
-        labels, Some(n), "node", "label"), n)
-      converged = next.filter(col("label") =!= col("prev_label")).isEmpty
-      labels = next.select("node", "label")
-    }
-    (iter, labels.orderBy("node"))
+    val (rounds, labels) = MinLabel.converged(s, componentEdges(s, dir),
+      "node", "label", maxIters, sizeGuard = true)
+    (rounds, labels.orderBy("node"))
   }
+
+  /** The symmetrized store edges, cached in the layout keyed to the
+    * min-label aggregation (see [[pagerank]]).
+    */
+  private def componentEdges(s: SparkSession, dir: String): DataFrame =
+    directedEdges(s, dir).repartition(col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Hub-percolation robustness audit: connected components BEFORE and
     * AFTER removing the top-`nHubs` highest-degree nodes (degree desc,
@@ -711,38 +603,8 @@ object GraphOps {
         .union(edgesU.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = dirEdges.select(col("src").as("node")).distinct()
-      val n = nodes.count()
-      var labels = narrowTruncate(s, nodes.withColumn("label", col("node")), n)
-      var iter = 0
-      var converged = false
-      while (iter < maxIters && !converged) {
-        iter += 1
-        val neighborMin = dirEdges
-          .join(roundSide(labels.withColumnRenamed("node", "src"), n), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(min("label").as("nbr_label"))
-        // Pointer jump (shortcutting, the Rastogi et al. 2013
-        // hash-to-min family) fused into the same round: label ←
-        // min(neighbor-min, PREVIOUS round's label(label)), chased
-        // [[JumpDepth]] steps through the prior round's
-        // ALREADY-MATERIALIZED label frame — the round stays
-        // single-checkpoint (a fresh-jump variant measured round-count
-        // 64 → 31 but wall-flat: each round's cost here is the
-        // checkpoint job, so a second checkpoint for a fresher jump
-        // target is a wash; a DEEPER chase through the same stale frame
-        // is the free lever instead — see [[staleJumps]] for the
-        // invariant/fixpoint argument).
-        val next = narrowTruncate(s, staleJumps(labels
-          .join(roundSide(neighborMin, n), Seq("node"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_label"), col("label")))
-              .as("label"),
-            col("label").as("prev_label")),
-          labels, Some(n), "node", "label"), n)
-        converged = next.filter(col("label") =!= col("prev_label")).isEmpty
-        labels = next.select("node", "label")
-      }
+      val (_, labels) = MinLabel.converged(s, dirEdges, "node", "label",
+        maxIters, sizeGuard = true)
       val comps = labels.groupBy("label").agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("components"),
           sum("sz").as("nodes"), max("sz").as("giant_nodes"))
@@ -921,7 +783,7 @@ object GraphOps {
         .join(roundSide(picked, n), Seq("node"), "left")
         .select(col("node"),
           coalesce(col("nbr_label"), col("label")).as("label"))
-      // Same 2^iters plan-blowup guard as [[connectedComponents]].
+      // Same 2^iters plan-blowup guard as [[MinLabel.fixed]].
       if (i < iters) labels = narrowTruncate(s, labels, n)
     }
     labels.orderBy("node")
@@ -941,7 +803,7 @@ object GraphOps {
     * until no label changes — the 100×-scale-safe mode where the mixing
     * time is not bounded by today's measurement (the fixed-round
     * [[communityLpa]] stays the oracle-checked entry; same pairing as
-    * [[connectedComponentsConverged]]). One changed-labels scalar per
+    * [[MinLabel.converged]]). One changed-labels scalar per
     * round; synchronous plurality LPA can 2-cycle on bipartite-ish
     * structure, so `maxIters` is a hard stop, not just a safety margin.
     * Returns (rounds run, labels) — rounds = propagation rounds + 1 (the
@@ -969,7 +831,7 @@ object GraphOps {
         .select(col("node"), negate(col("m.neg")).as("nbr_label"))
       // Carry the previous label through the truncated frame so the
       // changed-label check is a filter over cached data (the
-      // [[connectedComponentsConverged]] shape).
+      // [[MinLabel.converged]] shape).
       val next = narrowTruncate(s, labels
         .join(roundSide(picked, n), Seq("node"), "left")
         .select(col("node"),
@@ -1566,8 +1428,7 @@ object GraphOps {
     * per-landmark min-hop distances to `rounds`, cached edge frame
     * exchange-free across rounds.
     */
-  private val landmarkStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val landmarkStore = new ParquetStore("graft-landmark-store")
 
   /** In-process materialized store of the [[landmarkDistances]] frame —
     * the frozen-pair/frozen-centroid pattern pointed at the landmark
@@ -1584,26 +1445,10 @@ object GraphOps {
     * invalidates on table rewrite.
     */
   private def frozenLandmarkDistances(
-      s: SparkSession, dir: String, rounds: Int, nSeeds: Int): DataFrame = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      s"#$rounds#$nSeeds#" + graft.Tables.contentToken(dir, "events")
-    val path = landmarkStore.computeIfAbsent(key, _ => {
-      val base = s.conf.getOption("graft.labelstore.dir")
-        .orElse(s.conf.getOption("graft.checkpoint.dir"))
-        .map { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, "graft-landmark-store")
-        }
-        .getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-landmark-store"))
-        .toString
-      landmarkDistances(s, dir, rounds, nSeeds)
-        .write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+      s: SparkSession, dir: String, rounds: Int, nSeeds: Int): DataFrame =
+    landmarkStore(s, dir,
+      s"#$rounds#$nSeeds#" + graft.Tables.contentToken(dir, "events"))(
+      landmarkDistances(s, dir, rounds, nSeeds))
 
   private def landmarkDistances(
       s: SparkSession, dir: String, rounds: Int, nSeeds: Int): DataFrame = {
@@ -2357,10 +2202,10 @@ object GraphOps {
           .persist(StorageLevel.MEMORY_AND_DISK)
         // FORWARD: min-ancestor label to a fixpoint, `batch` synchronous
         // rounds per checkpoint + convergence check, each round chased
-        // [[JumpDepth]] further through the LAST CHECKPOINT's f frame
-        // ([[staleJumps]] — valid here too: f(v)=u means u reaches v,
-        // and f_checkpoint(u)=w means w reaches u, so w reaches v; the
-        // fixpoint is still min-reacher, which is what the backward
+        // [[MinLabel.JumpDepth]] further through the LAST CHECKPOINT's f
+        // frame ([[MinLabel.staleJumps]] — valid here too: f(v)=u means u
+        // reaches v, and f_checkpoint(u)=w means w reaches u, so w reaches
+        // v; the fixpoint is still min-reacher, which is what the backward
         // phase and the unrolled oracle both assume).
         var f = narrow(active.withColumn("f", col("node")))
         var moving = true
@@ -2374,7 +2219,7 @@ object GraphOps {
                 "src")
               .groupBy(col("dst").as("node"))
               .agg(min("f").as("nbr"))
-            cur = staleJumps(
+            cur = MinLabel.staleJumps(
               cur.join(roundSide(nbrMin, n), Seq("node"), "left")
                 .select(col("node"),
                   least(col("f"), coalesce(col("nbr"), col("f"))).as("f")),

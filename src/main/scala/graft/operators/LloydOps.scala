@@ -35,7 +35,7 @@ import graft.Tables
   * judgment call as PageRank's convergence scalar or PCA's moment
   * matrix. Iteration count is fixed (the oracle-replayable contract);
   * production convergence-mode would add the one-scalar-per-round
-  * changed-count check of [[GraphOps.connectedComponentsConverged]].
+  * changed-count check of [[MinLabel.converged]].
   */
 object LloydOps {
 

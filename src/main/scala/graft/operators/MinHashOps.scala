@@ -342,8 +342,7 @@ object MinHashOps {
     */
   val PairStoreFloor = 300
 
-  private val pairStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pairStore = new ParquetStore("graft-pair-store")
 
   /** In-process materialized store of the df-capped exact n-gram-Jaccard
     * pair set over `dir`'s documents table — the
@@ -360,28 +359,13 @@ object MinHashOps {
     * `ngram_stop_shingles`). Content-token keying invalidates on table
     * rewrite.
     */
-  def frozenPairs(s: SparkSession, dir: String): DataFrame = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#" + PairStoreFloor + "#" + Tables.contentToken(dir, "documents")
-    val path = pairStore.computeIfAbsent(key, _ => {
-      val base = s.conf.getOption("graft.labelstore.dir")
-        .orElse(s.conf.getOption("graft.checkpoint.dir"))
-        .map { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, "graft-pair-store")
-        }
-        .getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-pair-store"))
-        .toString
+  def frozenPairs(s: SparkSession, dir: String): DataFrame =
+    pairStore(s, dir,
+      "#" + PairStoreFloor + "#" + Tables.contentToken(dir, "documents")) {
       val docs = Tables.documents(s, dir)
       ngramJaccardPairs(docs, PairStoreFloor,
         dfCap = Some(defaultDfCap(docs.count())))
-        .write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** The exploded (doc_id, shingle) index, optionally df-capped: shingles
     * appearing in more than `dfCap` documents are dropped entirely.

@@ -395,6 +395,41 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(n <= 80, s"mst_forest ran $n jobs")
   }
 
+  test("min-label family spends no more jobs than its measured loop shape") {
+    import graft.operators.{AssocOps, DedupClusterOps, GraphOps}
+    // The edge store is built once per JVM; build it outside the counts,
+    // and clear leftover caches per entry so each count starts cold.
+    GraphOps.edges(spark, sf)
+    // Ceilings are the counts measured before the loops shared one
+    // driver (max of six cold runs): connected_components 25,
+    // components_conv 27, percolation_audit 115 or 125 (its two
+    // concurrent arms sometimes run 10 more AQE stage jobs around their
+    // node counts), clusters_conv 50, entity_clusters 24,
+    // entity_clusters_conv 34 — except entity_clusters, pinned at the 23
+    // it measures since its fixed loop stopped checkpointing its last
+    // round. One extra checkpoint per round, or a final one, fails here.
+    val family: Seq[(String, Int, () => Any)] = Seq(
+      ("connected_components", 25,
+        () => GraphOps.connectedComponents(spark, sf).collect()),
+      ("components_conv", 27,
+        () => GraphOps.connectedComponentsConverged(spark, sf)._2.collect()),
+      ("percolation_audit", 125,
+        () => GraphOps.percolationAudit(spark, sf).collect()),
+      ("clusters_conv", 50, () => DedupClusterOps.clustersConverged(
+        spark, Tables.documents(spark, sf))._2.collect()),
+      ("entity_clusters", 23,
+        () => AssocOps.entityClusters(spark, sf).collect()),
+      ("entity_clusters_conv", 34,
+        () => AssocOps.entityClustersConverged(spark, sf)._2.collect()))
+    val over = family.flatMap { case (name, ceiling, run) =>
+      spark.catalog.clearCache()
+      val n = countJobs(run())
+      info(s"$name jobs: $n (ceiling $ceiling)")
+      if (n > ceiling) Some(s"$name ran $n jobs > $ceiling") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
   test("capped dedup shuffles 8-byte shingle hashes, never shingle strings") {
     val plan = executedPlan(graft.operators.MinHashOps.dedupNgram(spark, sf))
     // The fused path hashes shingles ONCE and keys every downstream
