@@ -326,8 +326,8 @@ object AssocOps {
       s: SparkSession, p: DataFrame,
       maxDist: Int, rounds: Int): DataFrame =
     // Tiny match-edge frame: no join hints ([[MinLabel]]).
-    entitySummary(MinLabel.fixed(s, matchEdges(p, maxDist), "node", "lab",
-      rounds, sizeGuard = false))
+    entitySummary(MinLabel.fixed(s, MinLabel.Unguarded(matchEdges(p, maxDist)),
+      "node", "lab", rounds))
 
   /** Convergence-checked entity resolution — the [[entityClusters]] twin
     * that iterates min-label propagation until NO label changes
@@ -355,10 +355,8 @@ object AssocOps {
   private[graft] def entityClustersConvergedOf(
       s: SparkSession, p: DataFrame,
       maxDist: Int, maxIters: Int): (Int, DataFrame) = {
-    val edges = matchEdges(p, maxDist)
-    val (rounds, lab) = MinLabel.converged(s, edges, "node", "lab",
-      maxIters, sizeGuard = false)
-    edges.unpersist(false)
+    val (rounds, lab) = MinLabel.converged(s,
+      MinLabel.Unguarded(matchEdges(p, maxDist)), "node", "lab", maxIters)
     (rounds, entitySummary(lab))
   }
 

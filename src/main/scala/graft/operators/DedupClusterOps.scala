@@ -81,7 +81,7 @@ object DedupClusterOps {
         dfCap = Some(MinHashOps.defaultDfCap(docs.count())))
       .select(col("doc_a"), col("doc_b"))
     withSurvivor(MinLabel.fixed(s, symmetrized(pairs), "doc_id", "cluster",
-      iters, sizeGuard = true))
+      iters))
   }
 
   /** Registered-query entry over the `documents` table: the convergence-
@@ -130,16 +130,21 @@ object DedupClusterOps {
       .select(col("doc_a"), col("doc_b"))
     val sym = symmetrized(pairs)
     val (rounds, labels) = MinLabel.converged(s, sym, "doc_id", "cluster",
-      maxIters, sizeGuard = true)
-    sym.unpersist(false)
+      maxIters)
+    sym.plain.unpersist(false)
     (rounds, withSurvivor(labels))
   }
 
-  /** Both directions of every `(doc_a, doc_b)` pair, cached for the loop. */
-  private def symmetrized(pairs: DataFrame): DataFrame =
-    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+  /** Both directions of every `(doc_a, doc_b)` pair, cached on both
+    * paths: the pair pipeline is too dear to run once for the guard count
+    * and again for the loop.
+    */
+  private def symmetrized(pairs: DataFrame): MinLabel.Guarded = {
+    val sym = GraphOps.symmetric(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    MinLabel.Guarded(sym, () => sym)
+  }
 
   /** `(doc_id, cluster, is_survivor)` ordered by doc: the survivor is the
     * cluster's minimum member.

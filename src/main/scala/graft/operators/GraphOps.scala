@@ -27,9 +27,11 @@ import graft.Tables
   *  - Triangle counting (reference: analysis/triangles_spark.py:83-106)
   *    deliberately does NOT replicate the reference's
   *    `dict(adjacency.collect())` driver-side broadcast — a scale-killer.
-  *    Instead: canonicalized (`src < dst`) edges, wedge self-join, then a
-  *    join against the closing edge; all distributed shuffle joins that AQE
-  *    can re-plan or skew-split at runtime.
+  *    Up to [[BroadcastEdgeLimit]] canonical (`src < dst`) edges, the
+  *    edges move into ONE executor task ([[GraphKernel]]) for an in-memory
+  *    forward count; above it, a wedge self-join, then a join against the
+  *    closing edge — distributed shuffle joins that AQE can re-plan or
+  *    skew-split at runtime.
   *
   * Numerical design: PageRank runs in **fixed-point integer arithmetic**
   * (scores scaled by 1e12, floor division). Integer sums are associative
@@ -133,10 +135,6 @@ object GraphOps {
     out
   }
 
-  /** Canonical undirected co-purchase edges (`src < dst`, distinct).
-    * Reference: analysis/pagerank_spark.py:86-99 builds (source, target)
-    * distinct edges from the raw table; same shape here.
-    */
   /** The co-purchase edge build, run directly against lineitem — the
     * priced builder under the [[edges]] store (and the body of the
     * `graph_degrees` entry, SURVEY row 12's "graph build", which always
@@ -169,24 +167,30 @@ object GraphOps {
     */
   private val edgeStore = new ParquetStore("graft-edge-store")
 
-  def edges(s: SparkSession, dir: String): DataFrame = {
-    val stored = edgeStore(s, dir,
-      "#edges#" + Tables.contentToken(dir, "lineitem"))(edgesDirect(s, dir))
+  def edges(s: SparkSession, dir: String): DataFrame =
     // The store's small files pack into 1-2 scan splits under the 128 MB
     // split size, which would serialize every downstream narrow stage
     // (the Tables.parallelized hazard, measured as regressions on the
     // per-round edge-join loops) — re-fan the scan to the session's
     // parallelism; consumers that need a keyed layout repartition anyway.
-    Tables.parallelized(stored)
-  }
+    Tables.parallelized(storedEdges(s, dir))
+
+  /** The edge store's scan as it lands, without the re-fan — for the
+    * in-task kernels ([[GraphKernel]]), which move it into one partition.
+    */
+  private def storedEdges(s: SparkSession, dir: String): DataFrame =
+    edgeStore(s, dir,
+      "#edges#" + Tables.contentToken(dir, "lineitem"))(edgesDirect(s, dir))
+
+  /** Both directions of every undirected `(src, dst)` edge. */
+  private[graft] def symmetric(und: DataFrame): DataFrame =
+    und.union(und.select(col("dst").as("src"), col("src").as("dst")))
 
   /** Symmetrized directed edge list (both directions of every undirected
     * edge) — the PageRank propagation graph.
     */
-  def directedEdges(s: SparkSession, dir: String): DataFrame = {
-    val und = edges(s, dir)
-    und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-  }
+  def directedEdges(s: SparkSession, dir: String): DataFrame =
+    symmetric(edges(s, dir))
 
   /** Graph-build summary: per-node out-degree, ordered by node
     * (reference: analysis/pagerank_spark.py:99 out-degree computation).
@@ -530,8 +534,8 @@ object GraphOps {
     * for hypothetical not-yet-converged nodes.
     */
   def connectedComponents(s: SparkSession, dir: String, iters: Int = 5): DataFrame =
-    MinLabel.fixed(s, componentEdges(s, dir), "node", "label", iters,
-      sizeGuard = true).orderBy("node")
+    MinLabel.fixed(s, componentEdges(s, dir), "node", "label", iters)
+      .orderBy("node")
 
   /** Convergence-checked connected components ([[MinLabel.converged]]).
     * The fixed-iteration [[connectedComponents]] stays as the
@@ -544,16 +548,17 @@ object GraphOps {
       dir: String,
       maxIters: Int = 50): (Int, DataFrame) = {
     val (rounds, labels) = MinLabel.converged(s, componentEdges(s, dir),
-      "node", "label", maxIters, sizeGuard = true)
+      "node", "label", maxIters)
     (rounds, labels.orderBy("node"))
   }
 
-  /** The symmetrized store edges, cached in the layout keyed to the
-    * min-label aggregation (see [[pagerank]]).
+  /** The symmetrized store edges; above the guard, re-fanned and cached in
+    * the layout keyed to the min-label aggregation (see [[pagerank]]).
     */
-  private def componentEdges(s: SparkSession, dir: String): DataFrame =
-    directedEdges(s, dir).repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private def componentEdges(s: SparkSession, dir: String): MinLabel.Edges =
+    MinLabel.Guarded(symmetric(storedEdges(s, dir)), () =>
+      directedEdges(s, dir).repartition(col("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Hub-percolation robustness audit: connected components BEFORE and
     * AFTER removing the top-`nHubs` highest-degree nodes (degree desc,
@@ -599,12 +604,10 @@ object GraphOps {
     val hubs = deg.orderBy(col("degree").desc, col("node")).limit(nHubs)
       .select("node")
     def summary(edgesU: DataFrame, variant: String): DataFrame = {
-      val dirEdges = edgesU
-        .union(edgesU.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (_, labels) = MinLabel.converged(s, dirEdges, "node", "label",
-        maxIters, sizeGuard = true)
+      val dirEdges = symmetric(edgesU)
+      val (_, labels) = MinLabel.converged(s, MinLabel.Guarded(dirEdges, () =>
+          dirEdges.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)),
+        "node", "label", maxIters)
       val comps = labels.groupBy("label").agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("components"),
           sum("sz").as("nodes"), max("sz").as("giant_nodes"))
@@ -946,6 +949,28 @@ object GraphOps {
     sb.toString
   }
 
+  /** Edge-count ceiling for small-graph plans. An edge row is ~16 bytes,
+    * so 5M edges is ~80 MB — small enough for one broadcast: up to it
+    * [[LinkOps]] broadcasts the edge list into its closing join, which
+    * spares the WEDGE set (the far larger side: Σ C(outdeg, 2) rows) from
+    * ever being exchanged.
+    *
+    * It also guards the in-task kernels ([[GraphKernel]]): triangle
+    * counting (rows = canonical undirected edges) and the guarded
+    * min-label loops ([[MinLabel.Guarded]], rows = directed edges). A
+    * kernel holds 40 bytes per counted row at its peak, so 200 MB here.
+    * `graft.KernelCrossover` (test scope) measured random graphs of 0.1M
+    * to 5M rows on local[4] under a 2 GB heap: the kernel beat the
+    * distributed rounds at every size (5M: converged 9.6 vs 25.1 s, five
+    * fixed rounds 6.4 vs 17.4 s, triangles 10.7 vs 23.0 s), its
+    * old-generation peak stayed under 190 MB, and two kernels at once
+    * (as `percolation_audit` runs them) under 410 MB. Wider clusters,
+    * where the rounds spread over more cores while the kernel stays one
+    * task, were not measured. Above the ceiling the plans degrade to the
+    * shuffle joins that are right when the edge list itself is huge.
+    */
+  val BroadcastEdgeLimit: Long = 5000000L
+
   /** Total triangle count, degree-ordered: every undirected edge is
     * oriented from its lower-(degree, id) endpoint to the higher one, so
     * each triangle is counted exactly once — as a pair of out-neighbors
@@ -958,20 +983,22 @@ object GraphOps {
     * self-join fans out deg² wedges at every hub, while out-degrees in
     * the (degree, id) orientation are bounded by O(√m) — at 100× the
     * corpus a hot part stops dominating the wedge stage, instead of
-    * relying on AQE skew-splitting to paper over a deg² blowup.
+    * relying on AQE skew-splitting to paper over a deg² blowup. Up to
+    * [[BroadcastEdgeLimit]] edges the same orientation counts inside one
+    * task ([[GraphKernel.triangleCount]]).
     */
-  /** Edge-count ceiling for broadcasting the undirected edge list into
-    * the triangle-closing join. An edge row is ~16 bytes, so 5M edges is
-    * ~80 MB — and it spares the WEDGE set (the far larger side: Σ
-    * C(outdeg, 2) rows) from ever being exchanged. Above the ceiling the
-    * closing join degrades to the shuffle join that is right when the
-    * edge list itself is huge.
-    */
-  val BroadcastEdgeLimit: Long = 5000000L
-
   def triangleCount(s: SparkSession, dir: String): DataFrame = {
-    val und = edges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    val undCount = und.count() // scalar: sizes the closing-join broadcast
+    val und = storedEdges(s, dir)
+    val m = und.count()
+    if (m <= BroadcastEdgeLimit) GraphKernel.triangleCount(und, m)
+    else orientedTriangles(Tables.parallelized(und)
+      .persist(StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** The distributed [[triangleCount]], whatever the edge count, over the
+    * canonical undirected edges `und`.
+    */
+  private[graft] def orientedTriangles(und: DataFrame): DataFrame = {
     val deg = und.select(col("src").as("node"))
       .union(und.select(col("dst").as("node")))
       .groupBy("node")
@@ -993,14 +1020,12 @@ object GraphOps {
     // Wedge at the orientation-minimal vertex: unordered out-neighbor
     // pairs, canonicalized by id so the closing edge lookup hits the
     // (src < dst) undirected list directly.
-    // Above the broadcast ceiling, hint the closing side into a SHUFFLED
-    // HASH join: the probe side is the wedge set — the far larger frame —
-    // and a sort-merge join would SORT it per partition (the sf1
-    // rehearsal measured that sort going superlinear); hashing the
-    // edge-list build side costs its size once and streams the wedges.
-    val closing =
-      if (undCount <= BroadcastEdgeLimit) broadcast(und)
-      else und.hint("shuffle_hash")
+    // Hint the closing side into a SHUFFLED HASH join: the probe side is
+    // the wedge set — the far larger frame — and a sort-merge join would
+    // SORT it per partition (the sf1 rehearsal measured that sort going
+    // superlinear); hashing the edge-list build side costs its size once
+    // and streams the wedges.
+    val closing = und.hint("shuffle_hash")
     oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))

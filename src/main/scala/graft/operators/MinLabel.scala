@@ -10,15 +10,21 @@ import org.apache.spark.storage.StorageLevel
   * a symmetrized `(src, dst)` edge frame starts labeled with its own id
   * and repeatedly takes the minimum label among itself and its
   * neighbours. Callers own only the edge frame (build, layout, caching),
-  * their key/label column names and the join-hint policy:
+  * their key/label column names and the join-hint policy, chosen by the
+  * form of [[Edges]] they pass:
   *
-  *  - `sizeGuard = true` counts the nodes once, broadcasts every per-round
-  *    node-sized side under [[GraphOps.BroadcastNodeLimit]]
-  *    ([[GraphOps.roundSide]]) and checkpoints narrow
-  *    ([[GraphOps.narrowTruncate]]) — the graph and dedup loops, where the
-  *    cached edge frame is then never re-shuffled across rounds.
-  *  - `sizeGuard = false` takes no count, adds no hints and checkpoints
-  *    with plain [[GraphOps.truncate]] — the entity loops, whose match-edge
+  *  - [[Guarded]] (the graph and dedup loops) counts its plain edge frame
+  *    once. At most [[GraphOps.BroadcastEdgeLimit]] rows run the loop
+  *    INSIDE ONE TASK ([[GraphKernel]]), an exact replay of the rounds
+  *    below — same key set, labels and round count — for a few jobs
+  *    instead of a few per round. Above the guard the caller's laid-out
+  *    frame is built and the distributed rounds count the nodes once,
+  *    broadcast every per-round node-sized side under
+  *    [[GraphOps.BroadcastNodeLimit]] ([[GraphOps.roundSide]]) and
+  *    checkpoint narrow ([[GraphOps.narrowTruncate]]), so the cached edge
+  *    frame is never re-shuffled across rounds.
+  *  - [[Unguarded]] takes no count, adds no hints and checkpoints with
+  *    plain [[GraphOps.truncate]] — the entity loops, whose match-edge
   *    frame is a few K rows: a forced per-round broadcast build is an
   *    extra blocking driver job per round, and an A/B with hints measured
   *    the entity family ~2× slower (2.98 → 5.5 s at sf0.1) than the
@@ -29,23 +35,25 @@ import org.apache.spark.storage.StorageLevel
   *  - [[fixed]]: `rounds` synchronous rounds of union + min-combine (one
   *    aggregation exchange, map-side combined, no join back) and no jump —
   *    the unrolled DuckDB oracles replay exactly these plain rounds, so
-  *    outputs match even for not-yet-converged nodes. Each level reads the
-  *    previous labels twice and Spark does not share common subplans
-  *    across joins, so every round but the last is checkpointed to keep
-  *    the plan linear instead of re-expanding 2^rounds times.
+  *    outputs match even for not-yet-converged nodes.
   *  - [[converged]]: neighbour-min, a left join with `least`, one fused
-  *    stale pointer jump ([[staleJumps]]) and ONE checkpoint per round,
-  *    until a round changes no label (checked by a filter over the
-  *    checkpointed frame, which carries the previous label — no per-round
-  *    join of two node-sized frames). This is the 100×-scale-safe mode: a
-  *    fixed round count silently under-merges any component whose
-  *    diameter exceeds it. At bench scales each round's wall cost IS its
-  *    checkpoint job, not its data: a variant with a second checkpoint
-  *    per round for a fresher jump target measured percolation 64 → 31
-  *    rounds but wall-flat, so the loop keeps one checkpoint per round and
-  *    jumps through the previous round's already-materialized frame.
-  *    Returns (rounds run, labels); rounds = propagation rounds + 1 (the
-  *    round that observes no change).
+  *    stale pointer jump ([[staleJumps]]), until a round changes no label.
+  *    This is the 100×-scale-safe mode: a fixed round count silently
+  *    under-merges any component whose diameter exceeds it. Returns
+  *    (rounds run, labels); rounds = propagation rounds + 1 (the round
+  *    that observes no change).
+  *
+  * Checkpoints, in the distributed rounds only: each fixed level reads the
+  * previous labels twice and Spark does not share common subplans across
+  * joins, so every fixed round but the last is checkpointed to keep the
+  * plan linear instead of re-expanding 2^rounds times. A converged round
+  * takes ONE checkpoint and detects no-change by a filter over it (it
+  * carries the previous label — no per-round join of two node-sized
+  * frames). At bench scales each round's wall cost IS its checkpoint job,
+  * not its data: a variant with a second checkpoint per round for a
+  * fresher jump target measured percolation 64 → 31 rounds but wall-flat,
+  * so the loop keeps one checkpoint per round and jumps through the
+  * previous round's already-materialized frame.
   */
 private[graft] object MinLabel {
 
@@ -86,14 +94,49 @@ private[graft] object MinLabel {
     out
   }
 
+  /** A loop's symmetrized `(src, dst)` edges, with their guard. */
+  sealed trait Edges
+  /** Distributed rounds over `edges` as given, unhinted. */
+  final case class Unguarded(edges: DataFrame) extends Edges
+  /** `plain` is counted against [[GraphOps.BroadcastEdgeLimit]] and feeds
+    * the in-task kernel; `laidOut` builds the distributed rounds' cached
+    * layout, and runs only above the guard.
+    */
+  final case class Guarded(plain: DataFrame, laidOut: () => DataFrame) extends Edges
+
+  /** The guarded frame and its row count, when the kernel takes it. */
+  private def inTask(edges: Edges): Option[(DataFrame, Long)] = edges match {
+    case Guarded(plain, _) =>
+      Some((plain, plain.count())).filter(_._2 <= GraphOps.BroadcastEdgeLimit)
+    case _ => None
+  }
+
   /** `rounds` synchronous min-label rounds over `edges`; `(key, label)`. */
   def fixed(
-      s: SparkSession, edges: DataFrame, key: String, label: String,
-      rounds: Int, sizeGuard: Boolean): DataFrame = {
-    val loop = new Loop(s, edges, key, sizeGuard)
+      s: SparkSession, edges: Edges, key: String, label: String,
+      rounds: Int): DataFrame =
+    inTask(edges).fold(fixedRounds(s, edges, key, label, rounds)) {
+      case (plain, m) => GraphKernel.minLabelFixed(plain, m, key, label, rounds)
+    }
+
+  /** Min-label propagation over `edges` until no label changes, at most
+    * `maxRounds` rounds; (rounds run, `(key, label)`).
+    */
+  def converged(
+      s: SparkSession, edges: Edges, key: String, label: String,
+      maxRounds: Int): (Int, DataFrame) =
+    inTask(edges).fold(convergedRounds(s, edges, key, label, maxRounds)) {
+      case (plain, m) => GraphKernel.minLabelConverged(s, plain, m, key, label, maxRounds)
+    }
+
+  /** The distributed [[fixed]] rounds, whatever the edge count. */
+  private[graft] def fixedRounds(
+      s: SparkSession, edges: Edges, key: String, label: String,
+      rounds: Int): DataFrame = {
+    val loop = new Loop(s, edges, key)
     var labels = loop.init(label)
     for (i <- 1 to rounds) {
-      val propagated = edges
+      val propagated = loop.edges
         .join(loop.side(labels.withColumnRenamed(key, "src")), "src")
         .select(col("dst").as(key), col(label))
       labels = labels.union(propagated)
@@ -103,20 +146,18 @@ private[graft] object MinLabel {
     labels
   }
 
-  /** Min-label propagation over `edges` until no label changes, at most
-    * `maxRounds` rounds; (rounds run, `(key, label)`).
-    */
-  def converged(
-      s: SparkSession, edges: DataFrame, key: String, label: String,
-      maxRounds: Int, sizeGuard: Boolean): (Int, DataFrame) = {
-    val loop = new Loop(s, edges, key, sizeGuard)
+  /** The distributed [[converged]] rounds, whatever the edge count. */
+  private[graft] def convergedRounds(
+      s: SparkSession, edges: Edges, key: String, label: String,
+      maxRounds: Int): (Int, DataFrame) = {
+    val loop = new Loop(s, edges, key)
     val (nbr, prev) = (s"nbr_$label", s"prev_$label")
     var labels = loop.checkpoint(loop.init(label))
     var rounds = 0
     var converged = false
     while (rounds < maxRounds && !converged) {
       rounds += 1
-      val nbrMin = edges
+      val nbrMin = loop.edges
         .join(loop.side(labels.withColumnRenamed(key, "src")), "src")
         .groupBy(col("dst").as(key))
         .agg(min(label).as(nbr))
@@ -129,16 +170,21 @@ private[graft] object MinLabel {
       converged = next.filter(col(label) =!= col(prev)).isEmpty
       labels = next.select(key, label)
     }
-    // Every round is checkpointed, so the node cache is unreachable now.
+    // Every round is checkpointed, so the node and edge caches are
+    // unreachable now.
     loop.release()
     (rounds, labels)
   }
 
-  /** Per-run state: the node set, its count under the size guard, and
-    * the hint and checkpoint policy that follows from it.
+  /** Per-run state of the distributed rounds: the edge frame, the node
+    * set, its count under the size guard, and the hint and checkpoint
+    * policy that follows from it.
     */
-  private final class Loop(
-      s: SparkSession, edges: DataFrame, key: String, sizeGuard: Boolean) {
+  private final class Loop(s: SparkSession, e: Edges, key: String) {
+    val (edges, sizeGuard) = e match {
+      case Unguarded(d) => (d, false)
+      case Guarded(_, laidOut) => (laidOut(), true)
+    }
     private val nodes = {
       val d = edges.select(col("src").as(key)).distinct()
       if (sizeGuard) d.persist(StorageLevel.MEMORY_AND_DISK) else d
@@ -149,6 +195,6 @@ private[graft] object MinLabel {
     def side(df: DataFrame): DataFrame = n.fold(df)(GraphOps.roundSide(df, _))
     def checkpoint(df: DataFrame): DataFrame =
       n.fold(GraphOps.truncate(s, df))(GraphOps.narrowTruncate(s, df, _))
-    def release(): Unit = nodes.unpersist(false)
+    def release(): Unit = { nodes.unpersist(false); edges.unpersist(false) }
   }
 }
