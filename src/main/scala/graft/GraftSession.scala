@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * real cluster it would be sized to ~2-3× total executor cores (or left to
   * AQE coalescing, which is enabled). AQE also handles skew-join splitting
   * at runtime, which matters for the power-law keys (`user_id`, graph hubs).
+  * Streaming replay drains are the exception to core-count sizing: they
+  * size their state partitions by the bytes they replay, one per measured
+  * 1 MiB ([[graft.streaming.StreamingReplay.statePartitions]]): 1 up to
+  * sf0.01, 2 for the events replays at sf0.1.
   */
 object GraftSession {
   def build(cpus: String, appName: String = "graft"): SparkSession = {

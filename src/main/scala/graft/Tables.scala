@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, unix_micros}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Accessors for the benchmark tables (one parquet file per table, see
   * TESTDATA.md). All queries take the sf directory at call time so the same
@@ -9,8 +13,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * goes through the vectorized parquet scan with pushdown/pruning intact.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Every table read goes through here, with a known schema: a plain
+    * `spark.read.parquet(path)` runs a one-task Spark job to infer it
+    * (~100 ms on a warm local session, against ~13 ms and no job with the
+    * schema given), and a query reads several tables. The inferred
+    * `StructType` is kept per session — inference depends on session
+    * confs — and per absolute path, and is inferred again whenever the
+    * table's [[contentToken]] changes, so a rewritten table is read with
+    * its new columns.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path, contentToken(dir, name))).parquet(path)
+  }
+
+  private val schemas = new java.util.WeakHashMap[
+    SparkSession, ConcurrentHashMap[String, (String, StructType)]]()
+
+  private def schemaOf(s: SparkSession, path: String, token: String): StructType = {
+    val perSession = schemas.synchronized {
+      schemas.computeIfAbsent(s, _ => new ConcurrentHashMap())
+    }
+    val key = java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString
+    perSession.compute(key, (_, cached) =>
+      if (cached != null && cached._1 == token) cached
+      else (token, s.read.parquet(path).schema))._2
+  }
 
   /** `events.ts` is parquet TIMESTAMP(NANOS). How Spark surfaces that column
     * changed across engine versions, so branch on the *read* schema rather
@@ -29,16 +58,17 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(s, d, "events")
-    val tsUs = df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        org.apache.spark.sql.functions.expr("ts div 1000")
-      case _ =>
-        org.apache.spark.sql.functions.unix_micros(
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    }
-    df.withColumn("ts_us", tsUs)
+    withTsUs(table(s, d, "events"))
   }
+
+  /** Add the epoch-micros `ts_us` of [[events]] to a batch or streaming
+    * frame with the events table's raw `ts` column.
+    */
+  private[graft] def withTsUs(df: DataFrame): DataFrame =
+    df.withColumn("ts_us", df.schema("ts").dataType match {
+      case LongType => expr("ts div 1000")
+      case _ => unix_micros(col("ts").cast("timestamp"))
+    })
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -50,21 +80,32 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** name:size:mtime signature of every file under `dir/table.parquet` —
-    * pure metadata, and any rewrite of the table changes it. The cache
-    * key the in-process artifact stores (cluster labels, frozen
-    * centroids) use so a regenerated table invalidates naturally.
-    */
-  def contentToken(dir: String, tableName: String): String = {
+  private def files(dir: String, tableName: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
       else Seq(f)
-    val sig = walk(new java.io.File(dir, s"$tableName.parquet"))
+    walk(new java.io.File(dir, s"$tableName.parquet"))
+  }
+
+  /** name:size:mtime signature of every file under `dir/table.parquet` —
+    * pure metadata, so it costs a few file stats and no Spark job. Any
+    * rewrite that changes a file's size or mtime changes it; a rewrite in
+    * place with the same size and mtime does not. The cache key of the
+    * read schemas of [[table]] and of the in-process artifact stores
+    * (edge, pair and label stores, frozen centroids), so a regenerated
+    * table invalidates naturally.
+    */
+  def contentToken(dir: String, tableName: String): String = {
+    val sig = files(dir, tableName)
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       .mkString("|")
     java.lang.Integer.toHexString(sig.hashCode)
   }
+
+  /** On-disk size of `dir/table.parquet`, from file metadata. */
+  private[graft] def sizeBytes(dir: String, tableName: String): Long =
+    files(dir, tableName).map(_.length).sum
 
   /** Decouple heavy per-row compute (regex tokenization, shingling,
     * per-char explodes) from the SOURCE file's split layout: a corpus

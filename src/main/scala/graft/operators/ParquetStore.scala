@@ -2,24 +2,28 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A JVM-lifetime parquet artifact store: the first call for a key runs
   * `build` and writes its result to a fresh `prefix`-named directory;
-  * every later call for that key reads the parquet. Keys are the
-  * normalized absolute table directory plus a caller suffix (which holds
-  * the table content token, so a rewritten table builds afresh).
+  * every later call for that key reads the parquet, with the schema read
+  * back once at build time, so no later read runs a schema-inference job.
+  * Keys are the normalized absolute table directory plus a caller suffix
+  * (which holds the table content token, so a rewritten table builds
+  * afresh).
   * Directories land under `graft.labelstore.dir`, falling back to
   * `graft.checkpoint.dir`, then java.io.tmpdir — set one of the confs in
   * any long-lived deployment so a tmp-reaper cannot collect an artifact
   * mid-session.
   */
 private[operators] final class ParquetStore(prefix: String) {
-  private val paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stored =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
   def apply(s: SparkSession, dir: String, suffix: String)(
       build: => DataFrame): DataFrame = {
     val key = Paths.get(dir).toAbsolutePath.normalize.toString + suffix
-    val path = paths.computeIfAbsent(key, _ => {
+    val (path, schema) = stored.computeIfAbsent(key, _ => {
       val base = s.conf.getOption("graft.labelstore.dir")
         .orElse(s.conf.getOption("graft.checkpoint.dir"))
         .map { d =>
@@ -30,8 +34,8 @@ private[operators] final class ParquetStore(prefix: String) {
         .getOrElse(Files.createTempDirectory(prefix))
         .toString
       build.write.mode("overwrite").parquet(base)
-      base
+      (base, s.read.parquet(base).schema)
     })
-    s.read.parquet(path)
+    s.read.schema(schema).parquet(path)
   }
 }

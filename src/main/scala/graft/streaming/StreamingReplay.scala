@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Deterministic batch-replay of a streaming query — the entry that puts
   * a REAL Structured Streaming execution inside the driver's DuckDB gate
   * (every other streaming component is differential-spec'd only, because
@@ -18,13 +20,12 @@ import org.apache.spark.sql.functions._
   * decomposition, and a plain SQL oracle gates the whole streaming
   * execution path (source listing → StateStore merges → sink commit).
   *
-  * The ts normalization is the [[graft.Tables.events]] branch verbatim
-  * (read-schema-dependent nanos handling) so the gate breaks loudly if
-  * the streaming read path ever diverges from the batch one.
+  * The ts normalization is [[graft.Tables.withTsUs]], the one the batch
+  * [[graft.Tables.events]] read uses (read-schema-dependent nanos
+  * handling), so the gate breaks loudly if the streaming read path ever
+  * diverges from the batch one.
   */
 object StreamingReplay {
-
-  private val ViewName = "graft_streaming_replay_hourly"
 
   /** Base directory for the replay gates' EPHEMERAL stream checkpoints.
     *
@@ -61,39 +62,14 @@ object StreamingReplay {
 
   /** Hourly event counts per type via a real streaming execution. */
   def hourlyTypeCounts(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/events.parquet"
-    val raw = s.read.parquet(path)
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case _ => unix_micros(col("ts").cast("timestamp"))
-    }
-    // The file source requires a DIRECTORY: stream the sf dir itself,
-    // glob-filtered to the events table file.
-    val agg = s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts_us", tsUs)
+    val agg = eventsStream(s, dir)
       .withColumn("hour_bucket", expr("ts_us div 3600000000"))
       .groupBy("hour_bucket", "event_type")
       .agg(
         count(lit(1)).as("events"),
         min("ts_us").as("first_us"),
         max("ts_us").as("last_us"))
-    s.catalog.dropTempView(ViewName)
-    // Same 8-partition state sizing as [[drain]] (complete-mode snapshot
-    // is partitioning-proof; conf restored after).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try withTempCheckpoint(s) { ck =>
-      val q = agg.writeStream.format("memory").queryName(ViewName)
-        .option("checkpointLocation", ck)
-        .outputMode("complete").start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(ViewName)
+    drain(s, agg, "graft_streaming_replay_hourly", "complete", dir, "events")
       .select(col("hour_bucket"), col("event_type"), col("events"),
         col("first_us"), col("last_us"))
       .orderBy("hour_bucket", "event_type")
@@ -107,34 +83,63 @@ object StreamingReplay {
       | max(epoch_us(ts)) AS last_us
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** A streaming documents source for replay gates: the file source over
-    * the sf directory glob-filtered to the documents table.
+  /** A replay source: the file source over the sf directory (the file
+    * source requires a directory), glob-filtered to one table's file and
+    * read with that table's cached schema, one file per micro-batch.
     */
-  private def docsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    s.readStream.schema(schema)
+  private def tableStream(s: SparkSession, dir: String, name: String): DataFrame =
+    s.readStream.schema(Tables.table(s, dir, name).schema)
       .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
+      .option("pathGlobFilter", s"$name.parquet")
       .parquet(dir)
+
+  private def docsStream(s: SparkSession, dir: String): DataFrame =
+    tableStream(s, dir, "documents")
+
+  /** Replayed input bytes per state partition, measured: every replay
+    * drain was timed at 1, 2, 4 and 8 state partitions (3 runs each, on a
+    * 4-vCPU VM at local[4] and local[8]), at sf0.01 (events 216 KiB,
+    * documents 64 KiB, embeddings 189 KiB) and sf0.1 (2.0 MiB, 581 KiB,
+    * 780 KiB). Summed medians of the events replays: sf0.01 11.9 s at 1
+    * partition, 12.5 at 2, 17.1 at 8; sf0.1 15.6–16.1 s at 1, 15.2–15.3
+    * at 2, 15.7–16.2 at 4, 19.4 at 8 (the session_window sessionizer
+    * 2.7–3.0 s at 2 against 3.0–3.4 s at 1, the fMGWS sessionizer 1.4–1.6
+    * s against 1.7–1.9 s). The documents and embeddings replays, all
+    * under 1 MiB, summed the same or less at 1 than at 2 on every run.
+    * Any target between 1 and 2 MiB fits those runs; no run replays more
+    * than 2 MiB, so the rule is unmeasured above 2 partitions.
+    */
+  private[graft] val StateBytesPerPartition: Long = 1L << 20
+
+  /** State partitions for a drain over `bytes` of replayed input:
+    * `ceil(bytes / StateBytesPerPartition)`, clamped to
+    * `[1, defaultParallelism]` — sized by the data, not the core count.
+    */
+  private[graft] def statePartitions(s: SparkSession, bytes: Long): Int = {
+    val byBytes = (bytes + StateBytesPerPartition - 1) / StateBytesPerPartition
+    math.max(1L, math.min(byBytes, s.sparkContext.defaultParallelism.toLong)).toInt
   }
 
-  /** Drain a streaming frame into a memory sink and return the final
-    * snapshot table.
+  /** Drain a streaming frame that replays `dir`'s `table` into a memory
+    * sink and return the final snapshot table.
     *
-    * The drain runs with `spark.sql.shuffle.partitions` dropped to 8:
-    * every stateful operator instantiates one state store PER shuffle
-    * partition PER micro-batch, and at replay scale (a few hundred
-    * thousand rows) 32 partitions are pure store-init/commit overhead —
-    * the gates' readouts are decomposition-proof by construction
-    * (monoid snapshots / set rollups), so state partitioning is free to
-    * differ from the batch side. A production deployment sizes this to
-    * its own throughput; the conf is restored after the drain.
+    * The drain runs with `spark.sql.shuffle.partitions` set to
+    * [[statePartitions]] of the table's on-disk bytes: every stateful
+    * operator instantiates one state store PER shuffle partition PER
+    * micro-batch, so partitions beyond the data's size are pure
+    * store-init/commit overhead (see [[StateBytesPerPartition]]). A
+    * replay that reads its table twice (the stream-stream join) counts
+    * it once, which is how it was measured. The gates' readouts are
+    * decomposition-proof by construction (monoid snapshots / set
+    * rollups), so state partitioning is free to differ from the batch
+    * side. The conf is restored after the drain, also when it throws.
     */
-  private def drain(
-      s: SparkSession, df: DataFrame, view: String, mode: String): DataFrame = {
+  private[graft] def drain(s: SparkSession, df: DataFrame, view: String,
+      mode: String, dir: String, table: String): DataFrame = {
     s.catalog.dropTempView(view)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set("spark.sql.shuffle.partitions",
+      statePartitions(s, Tables.sizeBytes(dir, table)).toLong)
     try withTempCheckpoint(s) { ck =>
       val q = df.writeStream.format("memory").queryName(view)
         .option("checkpointLocation", ck)
@@ -153,7 +158,7 @@ object StreamingReplay {
     */
   def manifestReplay(s: SparkSession, dir: String): DataFrame =
     drain(s, StreamingManifest.manifests(docsStream(s, dir)),
-      "graft_streaming_manifest", "complete")
+      "graft_streaming_manifest", "complete", dir, "documents")
       .orderBy("shard")
 
   /** [[StreamingDedup]] under the replay gate: the first-seen dedup
@@ -174,7 +179,8 @@ object StreamingReplay {
       docsStream(s, dir)
         .withColumn("ts",
           timestamp_micros((col("doc_id") + 86400L) * 1000000L)))
-    val survivors = drain(s, deduped, "graft_streaming_dedup", "append")
+    val survivors = drain(s, deduped, "graft_streaming_dedup", "append",
+      dir, "documents")
     val fp = graft.functions.GraftFunctions.poly_hash(
       col("text_hash"), 31, 1000000007L)
     survivors
@@ -183,21 +189,12 @@ object StreamingReplay {
       .orderBy("bucket")
   }
 
-  /** A streaming events source with a normalized TIMESTAMP `ts` (the
-    * [[hourlyTypeCounts]] read-schema branch, then micros → timestamp).
+  /** A streaming events source with `ts_us` and a normalized TIMESTAMP
+    * `ts` (micros → timestamp).
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case _ => unix_micros(col("ts").cast("timestamp"))
-    }
-    s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts_us", tsUs)
+    Tables.withTsUs(tableStream(s, dir, "events"))
       .withColumn("ts", timestamp_micros(col("ts_us")))
   }
 
@@ -214,7 +211,7 @@ object StreamingReplay {
     drain(s,
       StreamingHll.windowedDistinctUsers(
         eventsStream(s, dir).select(col("ts"), col("user_id"))),
-      "graft_streaming_hll", "complete")
+      "graft_streaming_hll", "complete", dir, "events")
       .select(unix_micros(col("window_start")).as("window_us"),
         col("est_distinct"))
       .orderBy("window_us")
@@ -228,7 +225,7 @@ object StreamingReplay {
     drain(s,
       StreamingQuantileSketch.sketch(
         eventsStream(s, dir).select(col("event_type"), col("value"))),
-      "graft_streaming_sketch", "complete")
+      "graft_streaming_sketch", "complete", dir, "events")
       .orderBy("event_type", "bucket")
 
   /** Oracle for [[sketchReplay]]: the identical signed fixed grid. */
@@ -239,17 +236,6 @@ object StreamingReplay {
       |FROM events WHERE value IS NOT NULL
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** A streaming embeddings source for replay gates: the file source
-    * over the sf directory glob-filtered to the embeddings table.
-    */
-  private def embStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-  }
-
   /** [[StreamingChunks]] under the replay gate: the stateless RAG
     * chunker drained append-mode over the documents replay. Chunking is
     * per-row projection with no state store, so the drained rows equal
@@ -259,7 +245,7 @@ object StreamingReplay {
     */
   def chunksReplay(s: SparkSession, dir: String): DataFrame =
     drain(s, StreamingChunks.chunks(docsStream(s, dir)),
-      "graft_streaming_chunks", "append")
+      "graft_streaming_chunks", "append", dir, "documents")
       .orderBy("doc_id", "chunk_idx")
 
   /** [[StreamingSemanticDecon]] under the replay gate: arriving corpus
@@ -274,10 +260,10 @@ object StreamingReplay {
     val evalVecs = AnnOps.evalCohort(
       graft.Tables.embeddings(s, dir), AnnOps.SemanticEvalN)
     val flags = StreamingSemanticDecon.flags(
-      embStream(s, dir).filter(col("vec_id") >= AnnOps.SemanticEvalN),
+      tableStream(s, dir, "embeddings").filter(col("vec_id") >= AnnOps.SemanticEvalN),
       evalVecs)
     AnnOps.semanticRollup(
-      drain(s, flags, "graft_streaming_semdecon", "append"))
+      drain(s, flags, "graft_streaming_semdecon", "append", dir, "embeddings"))
   }
 
   /** [[StreamingIvfIngest]] under the replay gate: vectors filed into
@@ -298,10 +284,10 @@ object StreamingReplay {
     // Tables.parallelized; measured 30 s at sf1 vs 3.6 at sf0.1 before
     // this). A production ingest's parallelism comes from its source;
     // the replay restores it with one stateless repartition.
-    val stream = embStream(s, dir)
+    val stream = tableStream(s, dir, "embeddings")
       .repartition(s.sparkContext.defaultParallelism)
     drain(s, StreamingIvfIngest.manifests(stream, cents),
-      "graft_streaming_ivf_ingest", "complete")
+      "graft_streaming_ivf_ingest", "complete", dir, "embeddings")
       .orderBy("list")
   }
 
@@ -319,7 +305,7 @@ object StreamingReplay {
         col("text"), 31, 1000000007L) % 10 === 0)
     val kept = drain(s,
       StreamingDecontaminate.clean(docsStream(s, dir), evalSet),
-      "graft_streaming_decon", "append")
+      "graft_streaming_decon", "append", dir, "documents")
       .groupBy("lang").agg(count(lit(1)).as("kept"))
     docs.groupBy("lang").agg(count(lit(1)).as("total"))
       .join(kept, Seq("lang"), "left")
@@ -348,7 +334,7 @@ object StreamingReplay {
         col("event_type"), col("value"))
       .as[UpsertEvent]
     val changes = StreamingUpsert.changelog(s, typed).toDF()
-    drain(s, changes, "graft_streaming_upsert", "append")
+    drain(s, changes, "graft_streaming_upsert", "append", dir, "events")
       .withColumn("ts_us", unix_micros(col("ts")))
       .groupBy("user_id")
       .agg(max(struct(col("ts_us"), col("event_id"),
@@ -380,7 +366,7 @@ object StreamingReplay {
     // pairs / 85 users at sf0.01; the 10-minute default matched 9).
     val joined = StreamJoins.followedWithin(
       clicks, purchases, windowSeconds = 14400L, watermarkDelay = "8 hours")
-    drain(s, joined, "graft_streaming_join", "append")
+    drain(s, joined, "graft_streaming_join", "append", dir, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("pairs"),
         sum(unix_micros(col("l_ts"))).as("l_us_mass"),
@@ -408,7 +394,7 @@ object StreamingReplay {
       .withColumn("ts",
         timestamp_micros((col("doc_id") + 86400L) * 1000000L))
     val survivors = drain(s, StreamingCuration.curateDigests(planted),
-      "graft_streaming_curation", "append")
+      "graft_streaming_curation", "append", dir, "documents")
     val fp = graft.functions.GraftFunctions.poly_hash(
       col("clean_hash"), 31, 1000000007L)
     survivors
@@ -425,7 +411,9 @@ object StreamingReplay {
     * fidelity rollup against the SAME oracle: any sink-path loss
     * (dropped rows, partition mangling, string corruption, uncommitted
     * files leaking) breaks the hash. Scratch dirs are PID-suffixed and
-    * wiped per run so a stale checkpoint can never skip the write.
+    * wiped per run so a stale checkpoint can never skip the write; the
+    * returned frame reads the written table lazily, so the scratch is
+    * deleted when the JVM's file systems close at exit.
     */
   def ingestReplay(s: SparkSession, dir: String): DataFrame = {
     val scratch =
@@ -433,7 +421,8 @@ object StreamingReplay {
         s"${ProcessHandle.current().pid()}"
     val hconf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(scratch)
-    p.getFileSystem(hconf).delete(p, true)
+    val fs = p.getFileSystem(hconf)
+    fs.delete(p, true)
     // The PARQUET table stays on real disk (writing it is the gate); only
     // the ephemeral checkpoint rides the RAM-backed base.
     withTempCheckpoint(s) { ck =>
@@ -442,6 +431,7 @@ object StreamingReplay {
         partitionBy = Seq("lang"))
       q.awaitTermination()
     }
+    fs.deleteOnExit(p)
     def fp(c: org.apache.spark.sql.Column) =
       graft.functions.GraftFunctions.poly_hash(c, 31, 1000000007L)
     s.read.parquet(s"$scratch/table")
@@ -558,54 +548,54 @@ object StreamingReplay {
     * timeout — the finite-replay analogue of "the stream keeps running".
     * Without this, append-mode sessions and pending fMGWS probes would
     * sit in state forever and the drained table would be empty.
+    *
+    * `drainStaged` gets the staged stream and must drain it; the stage is
+    * deleted when it returns, since the memory sink then holds the result.
     */
-  private def sentineledEventsStream(
-      s: SparkSession, dir: String, tag: String,
-      sentinelType: String): DataFrame = {
-    import org.apache.spark.sql.types.LongType
+  private def withSentinelStage(
+      s: SparkSession, dir: String, tag: String, sentinelType: String)(
+      drainStaged: DataFrame => DataFrame): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val isLong = raw.schema("ts").dataType == LongType
+    val raw = Tables.table(s, dir, "events")
     val scratch =
       s"/tmp/graft-replay-stage/${new java.io.File(dir).getName}-" +
         s"${ProcessHandle.current().pid()}-$tag"
     val p = new org.apache.hadoop.fs.Path(scratch)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
-    new java.io.File(scratch).mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$scratch/0_events.parquet"))
-    val tsLit =
-      if (isLong) lit(SentinelUs * 1000L) // nanos flavor
-      else timestamp_micros(lit(SentinelUs))
-    val sentinel = raw.limit(1).select(raw.schema.fields.toSeq.map { f =>
-      (f.name match {
-        case "ts" => tsLit
-        case "event_id" | "user_id" => lit(-1L)
-        case "event_type" => lit(sentinelType)
-        case _ => lit(null)
-      }).cast(f.dataType).as(f.name)
-    }: _*)
-    val tmpOut = s"$scratch/_sentinel_tmp"
-    sentinel.coalesce(1).write.mode("overwrite").parquet(tmpOut)
-    val part = new java.io.File(tmpOut).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no sentinel part file under $tmpOut"))
-    java.nio.file.Files.move(
-      part.toPath, java.nio.file.Paths.get(s"$scratch/1_sentinel.parquet"))
-    fs.delete(new org.apache.hadoop.fs.Path(tmpOut), true)
-    val now = System.currentTimeMillis()
-    new java.io.File(s"$scratch/0_events.parquet").setLastModified(now - 600000L)
-    new java.io.File(s"$scratch/1_sentinel.parquet").setLastModified(now)
-    val tsUs =
-      if (isLong) expr("ts div 1000")
-      else unix_micros(col("ts").cast("timestamp"))
-    s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(scratch)
-      .withColumn("ts_us", tsUs)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
+    try {
+      new java.io.File(scratch).mkdirs()
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$scratch/0_events.parquet"))
+      val tsLit =
+        if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+          lit(SentinelUs * 1000L) // nanos flavor
+        else timestamp_micros(lit(SentinelUs))
+      val sentinel = raw.limit(1).select(raw.schema.fields.toSeq.map { f =>
+        (f.name match {
+          case "ts" => tsLit
+          case "event_id" | "user_id" => lit(-1L)
+          case "event_type" => lit(sentinelType)
+          case _ => lit(null)
+        }).cast(f.dataType).as(f.name)
+      }: _*)
+      val tmpOut = s"$scratch/_sentinel_tmp"
+      sentinel.coalesce(1).write.mode("overwrite").parquet(tmpOut)
+      val part = new java.io.File(tmpOut).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no sentinel part file under $tmpOut"))
+      java.nio.file.Files.move(
+        part.toPath, java.nio.file.Paths.get(s"$scratch/1_sentinel.parquet"))
+      fs.delete(new org.apache.hadoop.fs.Path(tmpOut), true)
+      val now = System.currentTimeMillis()
+      new java.io.File(s"$scratch/0_events.parquet").setLastModified(now - 600000L)
+      new java.io.File(s"$scratch/1_sentinel.parquet").setLastModified(now)
+      drainStaged(Tables.withTsUs(s.readStream.schema(raw.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(scratch))
+        .withColumn("ts", timestamp_micros(col("ts_us"))))
+    } finally fs.delete(p, true)
   }
 
   /** [[StreamingSessionize]] under the replay gate: `session_window` +
@@ -618,11 +608,11 @@ object StreamingReplay {
     * exactly what the gate prices against the independent lag-based SQL.
     */
   def sessionizeReplay(s: SparkSession, dir: String): DataFrame = {
-    val staged = sentineledEventsStream(s, dir, "sessionize", "view")
-      .withColumn("value", expr("cast(floor(value * 1000 + 0.5) as long)"))
-    val sess = StreamingSessionize.sessions(staged)
-    drain(s, sess, "graft_streaming_sessionize", "append")
-      .filter(col("user_id") >= 0)
+    withSentinelStage(s, dir, "sessionize", "view") { staged =>
+      val sess = StreamingSessionize.sessions(staged
+        .withColumn("value", expr("cast(floor(value * 1000 + 0.5) as long)")))
+      drain(s, sess, "graft_streaming_sessionize", "append", dir, "events")
+    }.filter(col("user_id") >= 0)
       .select(col("user_id"),
         unix_micros(col("session_start")).as("start_us"),
         unix_micros(col("session_end")).as("end_us"),
@@ -674,7 +664,7 @@ object StreamingReplay {
         expr("cast(floor(value * 1000 + 0.5) as double)").as("value"))
       .as[SessionEvent]
     val closed = StatefulSessions.sessions(s, typed).toDF()
-    drain(s, closed, "graft_streaming_sessions_state", "append")
+    drain(s, closed, "graft_streaming_sessions_state", "append", dir, "events")
       .select(col("user_id"),
         expr("unix_micros(session_start) div 1000").as("start_ms"),
         expr("unix_micros(session_end) div 1000").as("end_ms"),
@@ -721,14 +711,15 @@ object StreamingReplay {
     */
   def funnelReplay(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val typed = sentineledEventsStream(s, dir, "funnel", "view")
-      .select(col("user_id"),
-        timestamp_millis(expr("ts_us div 1000")).as("ts"),
-        col("event_type"))
-      .as[FunnelInput]
-    val stages = StreamingFunnel.stages(s, typed).toDF()
-    drain(s, stages, "graft_streaming_funnel", "append")
-      .filter(col("user_id") >= 0)
+    withSentinelStage(s, dir, "funnel", "view") { staged =>
+      val typed = staged
+        .select(col("user_id"),
+          timestamp_millis(expr("ts_us div 1000")).as("ts"),
+          col("event_type"))
+        .as[FunnelInput]
+      drain(s, StreamingFunnel.stages(s, typed).toDF(),
+        "graft_streaming_funnel", "append", dir, "events")
+    }.filter(col("user_id") >= 0)
       .select(col("user_id"), col("stage"),
         expr("unix_micros(ts) div 1000").as("ts_ms"))
       .orderBy("user_id", "stage")
@@ -762,16 +753,17 @@ object StreamingReplay {
     */
   def asofReplay(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val typed = sentineledEventsStream(s, dir, "asof", "click")
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("user_id"),
-        timestamp_millis(expr("ts_us div 1000")).as("ts"),
-        col("event_id"),
-        (col("event_type") === "purchase").as("is_left"))
-      .as[AsofInput]
-    val out = StreamingAsof.matches(s, typed).toDF()
-    drain(s, out, "graft_streaming_asof", "append")
-      .filter(col("user_id") >= 0)
+    withSentinelStage(s, dir, "asof", "click") { staged =>
+      val typed = staged
+        .filter(col("event_type").isin("click", "purchase"))
+        .select(col("user_id"),
+          timestamp_millis(expr("ts_us div 1000")).as("ts"),
+          col("event_id"),
+          (col("event_type") === "purchase").as("is_left"))
+        .as[AsofInput]
+      drain(s, StreamingAsof.matches(s, typed).toDF(),
+        "graft_streaming_asof", "append", dir, "events")
+    }.filter(col("user_id") >= 0)
       .select(col("event_id"), col("user_id"),
         expr("unix_micros(ts) div 1000").as("ts_ms"),
         col("matched_id"),

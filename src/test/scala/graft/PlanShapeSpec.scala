@@ -334,28 +334,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(exchanges == Set("hash", "range"), s"exchanges $exchanges in:\n$plan")
   }
 
-  /** Run `op` and count Spark jobs — each job is one blocking driver
-    * round-trip, the currency the iterative operators must spend
-    * frugally (the r10 finding: per-squaring convergence polls made
-    * mst_forest the slowest query on driver boxes).
-    */
-  private def countJobs(op: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      op
-      // The listener bus is async; settle until the count stops moving.
-      var prev = -1
-      while (jobs.get() != prev) { prev = jobs.get(); Thread.sleep(250) }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
+  private def countJobs(op: => Unit): Int = TestSession.countJobs(op)
 
   test("bfs_hops spends one aggregate exchange and one checkpoint per round") {
     val n = countJobs(graft.operators.GraphOps.bfsHops(spark, sf).collect())
@@ -404,23 +383,24 @@ class PlanShapeSpec extends AnyFunSuite {
     // the triangle count run in one task under the edge guard
     // (GraphKernel): a guard count, the single-partition exchange, the
     // kernel (plus, converged, its checkpoint and round read) and the
-    // final collect. The entity loops stay distributed (unguarded); one
+    // final collect; a warm store or table read runs no schema-inference
+    // job (TablesSpec). The entity loops stay distributed (unguarded); one
     // extra checkpoint per round, or a final one, fails them here, and a
     // guarded loop falling back to per-round jobs fails the rest.
     val family: Seq[(String, Int, () => Any)] = Seq(
-      ("connected_components", 5,
+      ("connected_components", 4,
         () => GraphOps.connectedComponents(spark, sf).collect()),
-      ("components_conv", 9,
+      ("components_conv", 8,
         () => GraphOps.connectedComponentsConverged(spark, sf)._2.collect()),
-      ("percolation_audit", 54,
+      ("percolation_audit", 53,
         () => GraphOps.percolationAudit(spark, sf).collect()),
       ("clusters_conv", 38, () => DedupClusterOps.clustersConverged(
         spark, Tables.documents(spark, sf))._2.collect()),
       ("entity_clusters", 23,
         () => AssocOps.entityClusters(spark, sf).collect()),
-      ("entity_clusters_conv", 34,
+      ("entity_clusters_conv", 33,
         () => AssocOps.entityClustersConverged(spark, sf)._2.collect()),
-      ("triangle_count", 5,
+      ("triangle_count", 4,
         () => GraphOps.triangleCount(spark, sf).collect()))
     val over = family.flatMap { case (name, ceiling, run) =>
       spark.catalog.clearCache()

@@ -13,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *      must equal the independently-computed epoch micros of the row.
   *   2. Every registered query must at least pass analysis (`.schema`
   *      forces resolution without executing) at sf0.001.
+  * It also pins the cached read schemas: a warm table or artifact-store
+  * read runs no Spark job, yet serves exactly the schema an inferring
+  * read would, and a rewritten table is read with its new columns.
   */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -52,5 +55,72 @@ class TablesSpec extends AnyFunSuite {
       catch { case e: Exception => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
     }
     assert(failures.isEmpty, s"queries failing analysis:\n${failures.mkString("\n")}")
+  }
+
+  private val tableNames = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  test("cached table schemas equal a fresh inferring read, nullability included") {
+    tableNames.foreach { name =>
+      val cached = Tables.table(spark, sf, name).schema
+      val inferred = spark.read.parquet(s"$sf/$name.parquet").schema
+      // StructType equality compares names, types, nullability and metadata.
+      assert(cached == inferred, s"$name: cached $cached != inferred $inferred")
+    }
+  }
+
+  test("a warm table read starts no Spark job") {
+    Tables.lineitem(spark, sf)
+    assert(TestSession.countJobs(Tables.lineitem(spark, sf)) == 0)
+  }
+
+  test("a warm edge-store read starts no Spark job") {
+    graft.operators.GraphOps.edges(spark, sf)
+    assert(TestSession.countJobs(graft.operators.GraphOps.edges(spark, sf)) == 0)
+  }
+
+  test("a table rewritten with different columns is read with its new schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-spec")
+    val path = s"$dir/t.parquet"
+    try {
+      spark.range(3).selectExpr("id AS a").write.parquet(path)
+      assert(Tables.table(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+      spark.range(3).selectExpr("id AS b", "CAST(id * 2 AS STRING) AS c")
+        .write.mode("overwrite").parquet(path)
+      val df = Tables.table(spark, dir.toString, "t")
+      assert(df.schema == spark.read.parquet(path).schema)
+      assert(df.orderBy("b").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((0L, "0"), (1L, "2"), (2L, "4")))
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir.toString)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  test("replay state partitions follow the replayed bytes, clamped to [1, cores]") {
+    import graft.streaming.StreamingReplay.{StateBytesPerPartition, statePartitions}
+    val sfBytes = tableNames.map(Tables.sizeBytes(sf, _)).sum
+    assert(sfBytes > 0)
+    assert(statePartitions(spark, sfBytes) == 1)
+    assert(spark.sparkContext.defaultParallelism >= 2)
+    assert(statePartitions(spark, StateBytesPerPartition + 1) == 2)
+    assert(statePartitions(spark, 1000L * StateBytesPerPartition) ==
+      spark.sparkContext.defaultParallelism)
+  }
+
+  test("drain restores spark.sql.shuffle.partitions when the drained query throws") {
+    import org.apache.spark.sql.functions.{assert_true, col}
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(before != "1", "the drain's own setting must differ from the session's")
+    val failing = spark.readStream
+      .schema(Tables.table(spark, sf, "region").schema)
+      .option("pathGlobFilter", "region.parquet")
+      .parquet(sf)
+      .filter(assert_true(col("r_regionkey") < 0).isNull)
+    intercept[Exception] {
+      graft.streaming.StreamingReplay.drain(spark, failing,
+        "graft_tables_spec_failing", "append", sf, "region")
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
   }
 }
