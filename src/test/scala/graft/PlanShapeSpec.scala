@@ -350,18 +350,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(n <= 45, s"bfs_hops ran $n jobs for 6 rounds")
   }
 
-  test("community_lpa spends bounded driver actions per round") {
-    val n = countJobs(graft.operators.GraphOps.communityLpa(spark, sf).collect())
-    info(s"community_lpa jobs: $n")
-    // Per round: one broadcast of the label frame, the (node,label)
-    // count exchange, the plurality struct-max, and the lineage
-    // checkpoint — each an AQE job or two, 4 rounds plus setup and the
-    // final sort-collect. A reintroduced per-round scalar poll or an
-    // unchecked 2^iters plan re-expansion blows well past the ceiling.
-    // Measured healthy shape: 17 jobs; ceiling with AQE-drift headroom.
-    assert(n <= 35, s"community_lpa ran $n jobs for 4 rounds")
-  }
-
   test("mst_forest contracts with O(1) driver actions per round") {
     val n = countJobs(graft.operators.GraphOps.boruvkaMsf(spark, sf).collect())
     info(s"mst_forest jobs: $n")
@@ -402,6 +390,40 @@ class PlanShapeSpec extends AnyFunSuite {
         () => AssocOps.entityClustersConverged(spark, sf)._2.collect()),
       ("triangle_count", 4,
         () => GraphOps.triangleCount(spark, sf).collect()))
+    val over = family.flatMap { case (name, ceiling, run) =>
+      spark.catalog.clearCache()
+      val n = countJobs(run())
+      info(s"$name jobs: $n (ceiling $ceiling)")
+      if (n > ceiling) Some(s"$name ran $n jobs > $ceiling") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("rank, LPA and k-core families spend no more jobs than their measured loop shape") {
+    import graft.operators.GraphOps
+    GraphOps.edges(spark, sf)
+    // Ceilings are the max of three cold runs of the hand-written loops
+    // these entries ran before they shared one round driver. Per round: a
+    // broadcast of the node frame, the aggregation and its checkpoint
+    // (fixed: every round but the last); converged adds one scalar stop
+    // test per round. A reintroduced per-round poll, a second checkpoint
+    // per round or an unchecked 2^rounds plan re-expansion fails here.
+    val family: Seq[(String, Int, () => Any)] = Seq(
+      ("pagerank", 43, () => GraphOps.pagerank(spark, sf, 10).collect()),
+      ("pagerank_weighted", 44,
+        () => GraphOps.pagerankWeighted(spark, sf, 10).collect()),
+      ("pagerank_topk", 41,
+        () => GraphOps.pagerankTopK(spark, sf, 10, 20).collect()),
+      ("pagerank_conv", 60,
+        () => GraphOps.pagerankConverged(spark, sf)._2.collect()),
+      ("ppr_seeded", 39, () => GraphOps.pprSeeded(spark, sf).collect()),
+      ("community_lpa", 21,
+        () => GraphOps.communityLpa(spark, sf, 4).collect()),
+      ("community_stats", 35,
+        () => GraphOps.communityStats(spark, sf, 4).collect()),
+      ("kcore", 18, () => GraphOps.kcore(spark, sf, 60, 4).collect()),
+      ("kcore_conv", 20,
+        () => GraphOps.kcoreConverged(spark, sf)._2.collect()))
     val over = family.flatMap { case (name, ceiling, run) =>
       spark.catalog.clearCache()
       val n = countJobs(run())
