@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
@@ -21,9 +21,9 @@ import graft.Tables
   *    here; at billions of nodes it degrades gracefully to a shuffle hash
   *    join on `src`), map-side partial aggregation of contributions, and a
   *    left join for nodes with no in-edges
-  *    (reference: analysis/pagerank_spark.py:155-163). `localCheckpoint`
-  *    every 5 iterations truncates lineage so Catalyst analysis cost stays
-  *    flat across iterations (frequency chosen by measurement).
+  *    (reference: analysis/pagerank_spark.py:155-163). Lineage is
+  *    truncated every round ([[NodeLoop]]), so Catalyst analysis cost
+  *    stays flat across iterations.
   *  - Triangle counting (reference: analysis/triangles_spark.py:83-106)
   *    deliberately does NOT replicate the reference's
   *    `dict(adjacency.collect())` driver-side broadcast — a scale-killer.
@@ -217,58 +217,61 @@ object GraphOps {
     * isolated-node handling intact.
     */
   def pagerank(s: SparkSession, dir: String, iters: Int = 10): DataFrame = {
+    val loop = rankLoop(s, dir)
+    loop.fixed(loop.nodes.withColumn("score", lit(Scale / loop.count)), iters)(
+      rankRound(loop, RankContrib, lit(teleport(loop.count))))
+      .select(col("node"), col("score").as("score_fp")).orderBy("node")
+  }
+
+  /** The unweighted rank contribution of an edge: `85 %` of its source's
+    * score, split evenly over the source's out-degree.
+    */
+  private val RankContrib = "(85 * score) div (100 * out_degree)"
+
+  /** The uniform teleport share of `n` nodes. */
+  private def teleport(n: Long): Long = (15L * Scale) / (100L * n) // Long division == SQL div
+
+  /** The unweighted rank loop ([[pagerank]], [[pagerankConverged]],
+    * [[pprSeeded]]): the store's symmetrized edges with the source's
+    * `out_degree` pre-joined, laid out by `dst` (see [[NodeLoop]]).
+    */
+  private def rankLoop(s: SparkSession, dir: String): NodeLoop = {
     // Cache the undirected list FIRST: deg, the edge join, and the node
-    // frame all traverse it, so uncached the lineitem self-join would
-    // execute 3× before the loop even starts (the dominant fixed cost).
+    // frame all traverse it, so uncached the edge read would execute 3×
+    // before the loop even starts.
     val und = edges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    val dirEdges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val dirEdges = symmetric(und)
     val deg = dirEdges.groupBy("src").agg(count(lit(1)).as("out_degree"))
-    // Pre-join degree onto edges once and HASH-PARTITION THE CACHE BY
-    // `dst` — the contribution aggregation's key. The per-round score
-    // join is a broadcast (partitioning-preserving), so every round's
-    // groupBy("dst") finds its clustering requirement already satisfied
-    // by the cached layout: ZERO exchanges inside the loop, one edge
-    // repartition paid once at build. (With a shuffle-joined score side
-    // above the broadcast guard the rounds shuffle anyway, and the
-    // pre-partitioning is simply ignored.)
-    val edgesDeg = dirEdges
+    new NodeLoop(s, dirEdges
       .join(deg, "src")
       .select(col("src"), col("dst"), col("out_degree"))
       .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar aggregate to the driver, not a collect
-    val teleport = (15L * Scale) / (100L * n) // Long division == SQL div
+      .persist(StorageLevel.MEMORY_AND_DISK), cachedNodes(dirEdges), sizeGuard = true)
+  }
 
-    var scores = nodes.withColumn("score", lit(Scale / n))
-    for (i <- 1 to iters) {
-      // Broadcasting the score side (size-guarded) keeps the cached edge
-      // frame exchange-free across all iterations: without it, every
-      // round re-shuffles the edges for a sort-merge join and the edge
-      // exchange dominates the whole query.
-      val contribs = edgesDeg
-        .join(roundSide(scores.withColumnRenamed("node", "src"), n), "src")
-        .select(
-          col("dst").as("node"),
-          expr(s"(85 * score) div (100 * out_degree)").as("contrib"))
-        .groupBy("node")
-        .agg(sum("contrib").as("contrib"))
-      scores = nodes
-        .join(roundSide(contribs, n), Seq("node"), "left")
-        .select(
-          col("node"),
-          (lit(teleport) + coalesce(col("contrib"), lit(0L))).as("score"))
-      // Truncate lineage EVERY round: the broadcast exchange that feeds
-      // the next iteration's edge join is materialized per query
-      // execution, so an unmaterialized k-round tail would re-execute
-      // O(k²/2) inner rounds between checkpoints. The frame is one row
-      // per node — materializing it each round is the cheap side of that
-      // trade (measured: every-5 with shuffle joins 8.2s, every-1 with
-      // broadcast joins ~5s at sf0.1).
-      if (i < iters) scores = narrowTruncate(s, scores, n)
-    }
-    scores.select(col("node"), col("score").as("score_fp")).orderBy("node")
+  /** The distinct `src` values of `edges` as `node`, cached. */
+  private def cachedNodes(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** One rank round over `loop`'s edges: each node's new `score` is its
+    * `teleport` share plus the sum of `contrib` (an expression over the
+    * edge's columns and its source's `score`) over its in-edges. The old
+    * score rides along as `prev_score` for [[pagerankConverged]]'s delta.
+    */
+  private def rankRound(loop: NodeLoop, contrib: String, teleport: Column)(
+      scores: DataFrame): DataFrame = {
+    val contribs = loop.edges
+      .join(loop.side(scores.select(col("node").as("src"), col("score"))), "src")
+      .select(col("dst").as("node"), expr(contrib).as("contrib"))
+      .groupBy("node")
+      .agg(sum("contrib").as("contrib"))
+    scores
+      .join(loop.side(contribs), Seq("node"), "left")
+      .select(
+        col("node"),
+        (teleport + coalesce(col("contrib"), lit(0L))).as("score"),
+        col("score").as("prev_score"))
   }
 
   /** Weighted PageRank: co-purchase multiplicity as edge weight, each
@@ -276,12 +279,10 @@ object GraphOps {
     * out-STRENGTH (sum of weights) instead of uniformly over degree —
     * the variant that matters when edges carry counts (a pair
     * co-purchased 50× should pull more rank than a one-off). Same
-    * fixed-point integer contract and the SAME loop discipline as
-    * [[pagerank]]: dst-partitioned weighted-edge cache built once,
-    * size-guarded broadcast of the per-round score frame (zero exchanges
-    * inside the loop), per-round lineage truncation. Contribution is
-    * `(85 · score · w) div (100 · strength)` — exact in both engines;
-    * the oracle unrolls the identical recurrence.
+    * fixed-point integer contract and the same [[rankRound]] as
+    * [[pagerank]], over its own dst-laid-out weighted edges. Contribution
+    * is `(85 · ((score · w) div strength)) div 100` — exact in both
+    * engines; the oracle unrolls the identical recurrence.
     */
   def pagerankWeighted(s: SparkSession, dir: String, iters: Int = 10): DataFrame = {
     val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
@@ -298,38 +299,20 @@ object GraphOps {
     val dirEdges = und.select(col("src"), col("dst"), col("w"))
       .union(und.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     val strength = dirEdges.groupBy("src").agg(sum("w").as("strength"))
-    val edgesW = dirEdges
+    val loop = new NodeLoop(s, dirEdges
       .join(strength, "src")
       .select(col("src"), col("dst"), col("w"), col("strength"))
       .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val teleport = (15L * Scale) / (100L * n)
-
-    var scores = nodes.withColumn("score", lit(Scale / n))
-    for (i <- 1 to iters) {
-      // STAGED: (score·w) div strength first (≤ score, since w ≤
-      // strength), then the 85/100 damping — the single monomial
-      // 85·score·w overflows BIGINT once a hot pair's multiplicity
-      // passes ~10⁶ at fixed-point scale 10¹²; staged, the bound is
-      // w ≤ ~9×10⁶ per edge. The oracle stages identically.
-      val contribs = edgesW
-        .join(roundSide(scores.withColumnRenamed("node", "src"), n), "src")
-        .select(
-          col("dst").as("node"),
-          expr(s"(85 * ((score * w) div strength)) div 100").as("contrib"))
-        .groupBy("node")
-        .agg(sum("contrib").as("contrib"))
-      scores = nodes
-        .join(roundSide(contribs, n), Seq("node"), "left")
-        .select(
-          col("node"),
-          (lit(teleport) + coalesce(col("contrib"), lit(0L))).as("score"))
-      if (i < iters) scores = narrowTruncate(s, scores, n)
-    }
-    scores.select(col("node"), col("score").as("score_fp")).orderBy("node")
+      .persist(StorageLevel.MEMORY_AND_DISK), cachedNodes(dirEdges), sizeGuard = true)
+    // STAGED: (score·w) div strength first (≤ score, since w ≤
+    // strength), then the 85/100 damping — the single monomial
+    // 85·score·w overflows BIGINT once a hot pair's multiplicity
+    // passes ~10⁶ at fixed-point scale 10¹²; staged, the bound is
+    // w ≤ ~9×10⁶ per edge. The oracle stages identically.
+    loop.fixed(loop.nodes.withColumn("score", lit(Scale / loop.count)), iters)(
+      rankRound(loop, "(85 * ((score * w) div strength)) div 100",
+        lit(teleport(loop.count))))
+      .select(col("node"), col("score").as("score_fp")).orderBy("node")
   }
 
   /** Fixed-point scale for HITS scores (1.0 == 1e6). Deliberately
@@ -475,56 +458,15 @@ object GraphOps {
       dir: String,
       maxIters: Int = 20,
       thresholdFp2: Long = 1000000L): (Int, DataFrame) = {
-    // Single cached edge build before the loop (see [[pagerank]]).
-    val und = edges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    val dirEdges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = dirEdges.groupBy("src").agg(count(lit(1)).as("out_degree"))
-    // Cache layout keyed to the loop's aggregation (see [[pagerank]]).
-    val edgesDeg = dirEdges
-      .join(deg, "src")
-      .select(col("src"), col("dst"), col("out_degree"))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val teleport = (15L * Scale) / (100L * n)
-
-    var scores = narrowTruncate(s, nodes.withColumn("score", lit(Scale / n)), n)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      iter += 1
-      val contribs = edgesDeg
-        .join(roundSide(scores.withColumnRenamed("node", "src"), n), "src")
-        .select(
-          col("dst").as("node"),
-          expr(s"(85 * score) div (100 * out_degree)").as("contrib"))
-        .groupBy("node")
-        .agg(sum("contrib").as("contrib"))
-      // Build next FROM the previous score frame (same node set as
-      // `nodes`), carrying the old score along — the convergence delta
-      // then reads the one truncated frame instead of shuffle-joining
-      // two node-sized frames per round.
-      val next = narrowTruncate(s, scores
-        .withColumnRenamed("score", "prev_score")
-        .join(roundSide(contribs, n), Seq("node"), "left")
-        .select(
-          col("node"),
-          (lit(teleport) + coalesce(col("contrib"), lit(0L))).as("score"),
-          col("prev_score")), n)
-      // decimal(38,0): squared fp deltas can exceed Long range at small n
-      val delta = next
-        .select(
-          sum(
-            (col("score") - col("prev_score")).cast("decimal(38,0)") *
-              (col("score") - col("prev_score")).cast("decimal(38,0)"))
-            .as("d2"))
-        .head().getDecimal(0)
-      converged = delta.compareTo(new java.math.BigDecimal(thresholdFp2)) < 0
-      scores = next.select("node", "score")
-    }
-    (iter, scores.select(col("node"), col("score").as("score_fp")).orderBy("node"))
+    val loop = rankLoop(s, dir)
+    val threshold = new java.math.BigDecimal(thresholdFp2)
+    // decimal(38,0): squared fp deltas can exceed Long range at small n
+    val d = (col("score") - col("prev_score")).cast("decimal(38,0)")
+    val (iters, scores) =
+      loop.converged(loop.nodes.withColumn("score", lit(Scale / loop.count)), maxIters)(
+        rankRound(loop, RankContrib, lit(teleport(loop.count))))(
+        _.select(sum(d * d)).head().getDecimal(0).compareTo(threshold) < 0)
+    (iters, scores.select(col("node"), col("score").as("score_fp")).orderBy("node"))
   }
 
   /** Connected components by min-label propagation ([[MinLabel.fixed]]):
@@ -553,7 +495,7 @@ object GraphOps {
   }
 
   /** The symmetrized store edges; above the guard, re-fanned and cached in
-    * the layout keyed to the min-label aggregation (see [[pagerank]]).
+    * the layout keyed to the min-label aggregation (see [[NodeLoop]]).
     */
   private def componentEdges(s: SparkSession, dir: String): MinLabel.Edges =
     MinLabel.Guarded(symmetric(storedEdges(s, dir)), () =>
@@ -761,16 +703,13 @@ object GraphOps {
     */
   private[graft] def lpaLabels(
       s: SparkSession, edgesIn: DataFrame, iters: Int): DataFrame = {
-    // Cache layout keyed to the loop's aggregation (see [[pagerank]]).
+    // Laid out by the per-destination count's key (see [[NodeLoop]]).
     val dirEdges = edgesIn.repartition(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar: sizes the broadcast guard
-    var labels = nodes.withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      val counts = dirEdges
-        .join(roundSide(labels.withColumnRenamed("node", "src"), n), "src")
+    val loop = new NodeLoop(s, dirEdges, cachedNodes(dirEdges), sizeGuard = true)
+    loop.fixed(loop.nodes.withColumn("label", col("node")), iters) { labels =>
+      val counts = loop.edges
+        .join(loop.side(labels.withColumnRenamed("node", "src")), "src")
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
       // Plurality with min-label tie-break as an all-integer struct max:
@@ -782,14 +721,11 @@ object GraphOps {
         .select(col("node"), negate(col("m.neg")).as("nbr_label"))
       // Every node in `nodes` has >= 1 neighbor (nodes come FROM edges),
       // so the left join's coalesce is belt-and-braces only.
-      labels = labels
-        .join(roundSide(picked, n), Seq("node"), "left")
+      labels
+        .join(loop.side(picked), Seq("node"), "left")
         .select(col("node"),
           coalesce(col("nbr_label"), col("label")).as("label"))
-      // Same 2^iters plan-blowup guard as [[MinLabel.fixed]].
-      if (i < iters) labels = narrowTruncate(s, labels, n)
-    }
-    labels.orderBy("node")
+    }.orderBy("node")
   }
 
   /** DuckDB oracle for [[communityLpa]]: identical unrolled synchronous
@@ -801,50 +737,6 @@ object GraphOps {
   def communityLpaOracleSql(iters: Int = 4): String =
     lpaChainSql(iters) + s"""
       |SELECT node, label FROM l$iters ORDER BY node""".stripMargin
-
-  /** Convergence-checked LPA: iterate synchronous plurality propagation
-    * until no label changes — the 100×-scale-safe mode where the mixing
-    * time is not bounded by today's measurement (the fixed-round
-    * [[communityLpa]] stays the oracle-checked entry; same pairing as
-    * [[MinLabel.converged]]). One changed-labels scalar per
-    * round; synchronous plurality LPA can 2-cycle on bipartite-ish
-    * structure, so `maxIters` is a hard stop, not just a safety margin.
-    * Returns (rounds run, labels) — rounds = propagation rounds + 1 (the
-    * round that observes zero changes).
-    */
-  def communityLpaConverged(
-      s: SparkSession, dir: String, maxIters: Int = 30): (Int, DataFrame) = {
-    val dirEdges = directedEdges(s, dir).repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // scalar: sizes the broadcast guard
-    var labels = narrowTruncate(s, nodes.withColumn("label", col("node")), n)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      iter += 1
-      val counts = dirEdges
-        .join(roundSide(labels.withColumnRenamed("node", "src"), n), "src")
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val picked = counts
-        .groupBy("node")
-        .agg(max(struct(col("c"), negate(col("label")).as("neg"))).as("m"))
-        .select(col("node"), negate(col("m.neg")).as("nbr_label"))
-      // Carry the previous label through the truncated frame so the
-      // changed-label check is a filter over cached data (the
-      // [[MinLabel.converged]] shape).
-      val next = narrowTruncate(s, labels
-        .join(roundSide(picked, n), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("nbr_label"), col("label")).as("label"),
-          col("label").as("prev_label")), n)
-      converged = next.filter(col("label") =!= col("prev_label")).isEmpty
-      labels = next.select("node", "label")
-    }
-    (iter, labels.orderBy("node"))
-  }
 
   /** Community rollup over the LPA labels: per community, its size,
     * internal (within-community) undirected edge count, total member
@@ -1042,69 +934,74 @@ object GraphOps {
     * DuckDB oracle runs the identical rounds, so outputs match even if a
     * hypothetical graph needed more rounds).
     *
-    * Scale shape: the ITERATED state is the alive-node set (one id per
-    * node), never the edge frame — edges stay cached and untruncated
-    * across all rounds, each round being two size-guarded broadcasts of
-    * the alive set into the edge scan plus one map-side-combined degree
-    * aggregation. Checkpointing the per-round node frame keeps lineage
-    * linear (the frame is referenced twice per round, so an unchecked
-    * chain re-expands 2^iters times).
+    * Scale shape: the ITERATED state is one `(node, alive)` row per
+    * node, never the edge frame — edges stay cached and untruncated
+    * across all rounds ([[NodeLoop]]), each round being two size-guarded
+    * broadcasts of the node frame into the edge scan plus one
+    * map-side-combined degree aggregation.
     */
   def kcore(s: SparkSession, dir: String, k: Int = 60, iters: Int = 4): DataFrame = {
-    // Cache layout keyed to the loop's aggregation (see [[pagerank]]).
-    val dirEdges = directedEdges(s, dir).repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-    val n = nodes.count() // scalar: sizes the broadcast guard
-    def survivorDegrees(alive: DataFrame): DataFrame =
-      dirEdges
-        .join(roundSide(alive.withColumnRenamed("node", "src"), n), "src")
-        .join(roundSide(alive.withColumnRenamed("node", "dst"), n), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("core_degree"))
-    var alive = nodes
-    for (_ <- 1 to iters)
-      alive = narrowTruncate(s,
-        survivorDegrees(alive).filter(col("core_degree") >= k).select("node"), n)
-    survivorDegrees(alive).orderBy("node")
+    val loop = kcoreLoop(s, dir)
+    // One round past `iters`: its degrees are those of the `iters`-round
+    // survivors, read straight off the last frame.
+    survivors(loop.fixed(allAlive(loop), iters + 1)(peel(loop, k)))
   }
 
-  /** Convergence-checked k-core: peel until a round removes no node (one
-    * scalar count per round, the [[pagerankConverged]] stopping shape) —
-    * the 100×-scale-safe mode, since peeling depth is data-dependent and
-    * a fixed round count silently under-peels. Returns (rounds, core).
+  /** Convergence-checked k-core: peel until a round removes no node, so
+    * the survivor count is unchanged — the 100×-scale-safe mode, since
+    * peeling depth is data-dependent and a fixed round count silently
+    * under-peels. Each round carries every node's previous `alive` flag,
+    * so the stop test is one filter over the checkpointed frame. Returns
+    * (rounds, core).
     */
   def kcoreConverged(
       s: SparkSession,
       dir: String,
       k: Int = 60,
       maxIters: Int = 50): (Int, DataFrame) = {
-    // Cache layout keyed to the loop's aggregation (see [[pagerank]]).
+    val loop = kcoreLoop(s, dir)
+    val (rounds, last) = loop.converged(allAlive(loop), maxIters)(peel(loop, k))(
+      _.filter(col("alive") =!= col("prev_alive")).isEmpty)
+    (rounds, survivors(peel(loop, k)(last)))
+  }
+
+  /** The k-core loop: the store's symmetrized edges, laid out by `src`,
+    * the degree aggregation's key (see [[NodeLoop]]).
+    */
+  private def kcoreLoop(s: SparkSession, dir: String): NodeLoop = {
     val dirEdges = directedEdges(s, dir).repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-    val n = nodes.count()
-    def survivorDegrees(alive: DataFrame): DataFrame =
-      dirEdges
-        .join(roundSide(alive.withColumnRenamed("node", "src"), n), "src")
-        .join(roundSide(alive.withColumnRenamed("node", "dst"), n), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("core_degree"))
-    var alive = narrowTruncate(s, nodes, n)
-    var size = alive.count()
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      iter += 1
-      val next = narrowTruncate(s,
-        survivorDegrees(alive).filter(col("core_degree") >= k).select("node"), n)
-      val nextSize = next.count()
-      converged = nextSize == size
-      alive = next
-      size = nextSize
-    }
-    (iter, survivorDegrees(alive).orderBy("node"))
+    new NodeLoop(s, dirEdges, dirEdges.select(col("src").as("node")).distinct(),
+      sizeGuard = true)
   }
+
+  /** The peeling frame before the first round: every node alive. */
+  private def allAlive(loop: NodeLoop): DataFrame =
+    loop.nodes.withColumn("alive", lit(true))
+
+  /** One peeling round over the `(node, alive)` frame `f`: per node, its
+    * `core_degree` (its edges whose both ends are alive in `f`), its flag
+    * before the round as `prev_alive`, and `alive` while it was alive with
+    * at least `k` alive neighbours. Every node keeps its row, so a peeled
+    * node stays visible to the converged stop test.
+    */
+  private def peel(loop: NodeLoop, k: Int)(f: DataFrame): DataFrame = {
+    def end(name: String, flag: String) =
+      loop.side(f.select(col("node").as(name), col("alive").as(flag)))
+    loop.edges
+      .join(end("src", "a"), "src")
+      .join(end("dst", "b"), "dst")
+      .groupBy(col("src").as("node"))
+      .agg(max("a").as("prev_alive"),
+        count(when(col("a") && col("b"), 1)).as("core_degree"))
+      .withColumn("alive", col("prev_alive") && col("core_degree") >= k)
+  }
+
+  /** The nodes alive before `f`'s round, with their in-core degree. */
+  private def survivors(f: DataFrame): DataFrame =
+    f.filter(col("prev_alive") && col("core_degree") > 0)
+      .select(col("node"), col("core_degree"))
+      .orderBy("node")
 
   /** DuckDB oracle for [[kcore]]: identical unrolled peeling rounds. */
   def kcoreOracleSql(k: Int = 60, iters: Int = 4): String = {
@@ -1212,52 +1109,25 @@ object GraphOps {
   /** Personalized PageRank from a deterministic seed set (`node % seedMod
     * == 0`): teleport mass returns ONLY to seeds, so scores measure
     * proximity to the seed cohort — the recsys / related-items twin of
-    * [[pagerank]]. Same loop discipline (one cached edge build, size-
-    * guarded broadcast score side, per-round truncation, integer fixed
-    * point at [[Scale]]); only the teleport vector differs. Emits the
-    * nodes with non-zero mass after `iters` rounds (mass reaches exactly
-    * the seed-reachable set).
+    * [[pagerank]]. Same [[rankRound]] and integer fixed point at
+    * [[Scale]]; only the teleport vector and the initial scores differ.
+    * Emits the nodes with non-zero mass after `iters` rounds (mass
+    * reaches exactly the seed-reachable set).
     */
   def pprSeeded(
       s: SparkSession,
       dir: String,
       iters: Int = 8,
       seedMod: Long = 97L): DataFrame = {
-    val und = edges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    val dirEdges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = dirEdges.groupBy("src").agg(count(lit(1)).as("out_degree"))
-    val edgesDeg = dirEdges
-      .join(deg, "src")
-      .select(col("src"), col("dst"), col("out_degree"))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = dirEdges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val nSeeds = nodes.filter(col("node") % seedMod === 0L).count()
-    require(nSeeds > 0, s"no seeds under node % $seedMod == 0")
-    val seedTeleport = (15L * Scale) / (100L * nSeeds)
+    val loop = rankLoop(s, dir)
     val isSeed = col("node") % seedMod === 0L
-
-    var scores = nodes.withColumn("score",
-      when(isSeed, lit(Scale / nSeeds)).otherwise(lit(0L)))
-    for (i <- 1 to iters) {
-      val contribs = edgesDeg
-        .join(roundSide(scores.withColumnRenamed("node", "src"), n), "src")
-        .select(
-          col("dst").as("node"),
-          expr(s"(85 * score) div (100 * out_degree)").as("contrib"))
-        .groupBy("node")
-        .agg(sum("contrib").as("contrib"))
-      scores = nodes
-        .join(roundSide(contribs, n), Seq("node"), "left")
-        .select(
-          col("node"),
-          (when(isSeed, lit(seedTeleport)).otherwise(lit(0L)) +
-            coalesce(col("contrib"), lit(0L))).as("score"))
-      if (i < iters) scores = narrowTruncate(s, scores, n)
-    }
-    scores.filter(col("score") > 0L)
+    val nSeeds = loop.nodes.filter(isSeed).count()
+    require(nSeeds > 0, s"no seeds under node % $seedMod == 0")
+    loop.fixed(loop.nodes.withColumn("score",
+      when(isSeed, lit(Scale / nSeeds)).otherwise(lit(0L))), iters)(
+      rankRound(loop, RankContrib,
+        when(isSeed, lit(teleport(nSeeds))).otherwise(lit(0L))))
+      .filter(col("score") > 0L)
       .select(col("node"), col("score").as("score_fp"))
       .orderBy("node")
   }
@@ -1809,7 +1679,7 @@ object GraphOps {
     * aggregate; nothing corpus-sized crosses the driver.
     */
   def assortativity(s: SparkSession, dir: String): DataFrame = {
-    // One cached edge build (see [[pagerank]]) — deg and both endpoint
+    // One cached edge build (see [[rankLoop]]) — deg and both endpoint
     // joins would otherwise re-run the lineitem self-join three times.
     val und = edges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val de = und.union(und.select(col("dst").as("src"), col("src").as("dst")))

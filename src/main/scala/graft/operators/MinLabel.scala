@@ -18,13 +18,10 @@ import org.apache.spark.storage.StorageLevel
   *    INSIDE ONE TASK ([[GraphKernel]]), an exact replay of the rounds
   *    below — same key set, labels and round count — for a few jobs
   *    instead of a few per round. Above the guard the caller's laid-out
-  *    frame is built and the distributed rounds count the nodes once,
-  *    broadcast every per-round node-sized side under
-  *    [[GraphOps.BroadcastNodeLimit]] ([[GraphOps.roundSide]]) and
-  *    checkpoint narrow ([[GraphOps.narrowTruncate]]), so the cached edge
-  *    frame is never re-shuffled across rounds.
-  *  - [[Unguarded]] takes no count, adds no hints and checkpoints with
-  *    plain [[GraphOps.truncate]] — the entity loops, whose match-edge
+  *    frame is built and the distributed rounds run a size-guarded
+  *    [[NodeLoop]] over it.
+  *  - [[Unguarded]] runs an unguarded [[NodeLoop]]: no count, no hints
+  *    and plain [[GraphOps.truncate]] — the entity loops, whose match-edge
   *    frame is a few K rows: a forced per-round broadcast build is an
   *    extra blocking driver job per round, and an A/B with hints measured
   *    the entity family ~2× slower (2.98 → 5.5 s at sf0.1) than the
@@ -43,17 +40,13 @@ import org.apache.spark.storage.StorageLevel
   *    (rounds run, labels); rounds = propagation rounds + 1 (the round
   *    that observes no change).
   *
-  * Checkpoints, in the distributed rounds only: each fixed level reads the
-  * previous labels twice and Spark does not share common subplans across
-  * joins, so every fixed round but the last is checkpointed to keep the
-  * plan linear instead of re-expanding 2^rounds times. A converged round
-  * takes ONE checkpoint and detects no-change by a filter over it (it
-  * carries the previous label — no per-round join of two node-sized
-  * frames). At bench scales each round's wall cost IS its checkpoint job,
-  * not its data: a variant with a second checkpoint per round for a
-  * fresher jump target measured percolation 64 → 31 rounds but wall-flat,
-  * so the loop keeps one checkpoint per round and jumps through the
-  * previous round's already-materialized frame.
+  * The distributed rounds are [[NodeLoop]]'s two stop rules, with its
+  * checkpoint policy; the converged round carries the previous label, and
+  * its stop test is a filter over the checkpointed frame. A variant with
+  * a second checkpoint per round for a fresher jump target measured
+  * percolation 64 → 31 rounds but wall-flat, so the loop keeps one
+  * checkpoint per round and jumps through the previous round's
+  * already-materialized frame.
   */
 private[graft] object MinLabel {
 
@@ -133,68 +126,54 @@ private[graft] object MinLabel {
   private[graft] def fixedRounds(
       s: SparkSession, edges: Edges, key: String, label: String,
       rounds: Int): DataFrame = {
-    val loop = new Loop(s, edges, key)
-    var labels = loop.init(label)
-    for (i <- 1 to rounds) {
+    val loop = nodeLoop(s, edges, key)
+    loop.fixed(loop.nodes.withColumn(label, col(key)), rounds) { labels =>
       val propagated = loop.edges
         .join(loop.side(labels.withColumnRenamed(key, "src")), "src")
         .select(col("dst").as(key), col(label))
-      labels = labels.union(propagated)
+      labels.union(propagated)
         .groupBy(key).agg(min(label).as(label))
-      if (i < rounds) labels = loop.checkpoint(labels)
     }
-    labels
   }
 
   /** The distributed [[converged]] rounds, whatever the edge count. */
   private[graft] def convergedRounds(
       s: SparkSession, edges: Edges, key: String, label: String,
       maxRounds: Int): (Int, DataFrame) = {
-    val loop = new Loop(s, edges, key)
+    val loop = nodeLoop(s, edges, key)
     val (nbr, prev) = (s"nbr_$label", s"prev_$label")
-    var labels = loop.checkpoint(loop.init(label))
-    var rounds = 0
-    var converged = false
-    while (rounds < maxRounds && !converged) {
-      rounds += 1
-      val nbrMin = loop.edges
-        .join(loop.side(labels.withColumnRenamed(key, "src")), "src")
-        .groupBy(col("dst").as(key))
-        .agg(min(label).as(nbr))
-      val next = loop.checkpoint(staleJumps(labels
-        .join(loop.side(nbrMin), Seq(key), "left")
-        .select(col(key),
-          least(col(label), coalesce(col(nbr), col(label))).as(label),
-          col(label).as(prev)),
-        labels, loop.n, key, label))
-      converged = next.filter(col(label) =!= col(prev)).isEmpty
-      labels = next.select(key, label)
-    }
+    val (rounds, last) =
+      loop.converged(loop.nodes.withColumn(label, col(key)), maxRounds) { frame =>
+        val labels = frame.select(key, label)
+        val nbrMin = loop.edges
+          .join(loop.side(labels.withColumnRenamed(key, "src")), "src")
+          .groupBy(col("dst").as(key))
+          .agg(min(label).as(nbr))
+        staleJumps(labels
+          .join(loop.side(nbrMin), Seq(key), "left")
+          .select(col(key),
+            least(col(label), coalesce(col(nbr), col(label))).as(label),
+            col(label).as(prev)),
+          labels, loop.n, key, label)
+      }(_.filter(col(label) =!= col(prev)).isEmpty)
     // Every round is checkpointed, so the node and edge caches are
     // unreachable now.
     loop.release()
-    (rounds, labels)
+    (rounds, last.select(key, label))
   }
 
-  /** Per-run state of the distributed rounds: the edge frame, the node
-    * set, its count under the size guard, and the hint and checkpoint
-    * policy that follows from it.
+  /** The distributed rounds' driver: the guarded form's laid-out frame,
+    * counted and hinted, with its node set cached, or the unguarded frame
+    * as given.
     */
-  private final class Loop(s: SparkSession, e: Edges, key: String) {
-    val (edges, sizeGuard) = e match {
-      case Unguarded(d) => (d, false)
-      case Guarded(_, laidOut) => (laidOut(), true)
+  private def nodeLoop(s: SparkSession, e: Edges, key: String): NodeLoop = {
+    def nodes(edges: DataFrame) = edges.select(col("src").as(key)).distinct()
+    e match {
+      case Unguarded(d) => new NodeLoop(s, d, nodes(d), sizeGuard = false)
+      case Guarded(_, laidOut) =>
+        val d = laidOut()
+        new NodeLoop(s, d, nodes(d).persist(StorageLevel.MEMORY_AND_DISK),
+          sizeGuard = true)
     }
-    private val nodes = {
-      val d = edges.select(col("src").as(key)).distinct()
-      if (sizeGuard) d.persist(StorageLevel.MEMORY_AND_DISK) else d
-    }
-    val n: Option[Long] = if (sizeGuard) Some(nodes.count()) else None
-
-    def init(label: String): DataFrame = nodes.withColumn(label, col(key))
-    def side(df: DataFrame): DataFrame = n.fold(df)(GraphOps.roundSide(df, _))
-    def checkpoint(df: DataFrame): DataFrame =
-      n.fold(GraphOps.truncate(s, df))(GraphOps.narrowTruncate(s, df, _))
-    def release(): Unit = { nodes.unpersist(false); edges.unpersist(false) }
   }
 }

@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.StructType
   * Directories land under `graft.labelstore.dir`, falling back to
   * `graft.checkpoint.dir`, then java.io.tmpdir — set one of the confs in
   * any long-lived deployment so a tmp-reaper cannot collect an artifact
-  * mid-session.
+  * mid-session. Each directory is deleted when the JVM's file systems
+  * close at exit, so no run leaves its artifacts behind; only directories
+  * this store created are registered.
   */
 private[operators] final class ParquetStore(prefix: String) {
   private val stored =
@@ -33,6 +35,8 @@ private[operators] final class ParquetStore(prefix: String) {
         }
         .getOrElse(Files.createTempDirectory(prefix))
         .toString
+      val p = new org.apache.hadoop.fs.Path(base)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
       build.write.mode("overwrite").parquet(base)
       (base, s.read.parquet(base).schema)
     })

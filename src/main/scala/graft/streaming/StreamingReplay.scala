@@ -425,16 +425,18 @@ object StreamingReplay {
     fs.delete(p, true)
     // The PARQUET table stays on real disk (writing it is the gate); only
     // the ephemeral checkpoint rides the RAM-backed base.
+    val docs = docsStream(s, dir)
     withTempCheckpoint(s) { ck =>
       val q = StreamingIngest.toPartitionedParquet(
-        docsStream(s, dir), s"$scratch/table", ck,
-        partitionBy = Seq("lang"))
+        docs, s"$scratch/table", ck, partitionBy = Seq("lang"))
       q.awaitTermination()
     }
     fs.deleteOnExit(p)
     def fp(c: org.apache.spark.sql.Column) =
       graft.functions.GraftFunctions.poly_hash(c, 31, 1000000007L)
-    s.read.parquet(s"$scratch/table")
+    // Read back with the stream's schema: no schema-inference job, and
+    // `lang` is still discovered as the partition column.
+    s.read.schema(docs.schema).parquet(s"$scratch/table")
       .groupBy("lang")
       .agg(
         count(lit(1)).as("n_docs"),

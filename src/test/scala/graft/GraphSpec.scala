@@ -20,11 +20,12 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("converged pagerank equals the fixed-iteration twin at its own fixed point") {
-    // The registered pagerank_conv entry is rows-only (data-dependent
-    // iteration count), but its output is NOT unverifiable: replaying the
-    // oracle-checked fixed-iteration pagerank for exactly the iteration
-    // count the converged mode chose must reproduce it bit-for-bit —
-    // integer fixed-point updates make both paths deterministic.
+    // The registered pagerank_conv entry has a full oracle that replays
+    // its stopping decision (pagerankConvergedOracleSql). Independently of
+    // it, replaying the oracle-checked fixed-iteration pagerank for exactly
+    // the iteration count the converged mode chose must reproduce it
+    // bit-for-bit — integer fixed-point updates make both paths
+    // deterministic.
     val (iters, convergedDf) = GraphOps.pagerankConverged(spark, sf)
     assert(iters > 1, s"iters=$iters")
     val fixed = GraphOps.pagerank(spark, sf, iters).collect()

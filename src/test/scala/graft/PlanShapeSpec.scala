@@ -403,7 +403,9 @@ class PlanShapeSpec extends AnyFunSuite {
     import graft.operators.GraphOps
     GraphOps.edges(spark, sf)
     // Ceilings are the max of three cold runs of the hand-written loops
-    // these entries ran before they shared one round driver. Per round: a
+    // these entries ran before they shared one round driver (NodeLoop);
+    // kcore_conv's is the driver's, 20 → 16, since its stop test filters
+    // the checkpointed frame instead of counting survivors. Per round: a
     // broadcast of the node frame, the aggregation and its checkpoint
     // (fixed: every round but the last); converged adds one scalar stop
     // test per round. A reintroduced per-round poll, a second checkpoint
@@ -422,7 +424,7 @@ class PlanShapeSpec extends AnyFunSuite {
       ("community_stats", 35,
         () => GraphOps.communityStats(spark, sf, 4).collect()),
       ("kcore", 18, () => GraphOps.kcore(spark, sf, 60, 4).collect()),
-      ("kcore_conv", 20,
+      ("kcore_conv", 16,
         () => GraphOps.kcoreConverged(spark, sf)._2.collect()))
     val over = family.flatMap { case (name, ceiling, run) =>
       spark.catalog.clearCache()

@@ -79,6 +79,26 @@ class TablesSpec extends AnyFunSuite {
     assert(TestSession.countJobs(graft.operators.GraphOps.edges(spark, sf)) == 0)
   }
 
+  test("the ingest replay reads its written table back without a Spark job") {
+    Tables.documents(spark, sf)
+    // Jobs outside the streaming query: the drain's own micro-batch jobs
+    // carry the query id, a schema-inferring read-back would not.
+    val batchJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).forall(_.getProperty("sql.streaming.queryId") == null))
+          batchJobs.incrementAndGet()
+    }
+    // countJobs settles the listener bus before the listener is removed.
+    spark.sparkContext.addSparkListener(listener)
+    val total =
+      try TestSession.countJobs(graft.streaming.StreamingReplay.ingestReplay(spark, sf))
+      finally spark.sparkContext.removeSparkListener(listener)
+    info(s"ingest replay jobs: $total, outside the stream: ${batchJobs.get}")
+    assert(batchJobs.get == 0)
+  }
+
   test("a table rewritten with different columns is read with its new schema") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tables-spec")
     val path = s"$dir/t.parquet"
