@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark harness: times every registered query end-to-end against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line.
@@ -18,6 +20,13 @@ import org.apache.spark.sql.SparkSession
   * `"spread"` in `bench_full.json`, so cross-round regressions can be
   * judged against the measured per-query min/median/max rather than a
   * folk variance number.
+  *
+  * Per-query layer metrics go under `"metrics"` in `bench_full.json`,
+  * never into the stdout lines: the classes Spark's codegen compiled
+  * during the query's timed reps and the milliseconds spent compiling
+  * them (JVM-wide counters, read before and after the reps; the
+  * warm-up run compiles the query's classes, so a nonzero count means
+  * the timed reps paid for recompiles).
   *
   * Output transport: the harness that invokes this keeps only the LAST
   * 2000 characters of stdout and parses the trailing JSON line, so the
@@ -38,11 +47,23 @@ object Bench {
   // JSON line plus a trailing newline must fit inside that window.
   private val maxLineChars = 1900
 
-  /** One benched query: median time, error (if any), and the sorted raw
-    * per-rep timings (the spread; single-element for slow/err queries).
+  /** Codegen work during a query's timed reps: classes compiled and
+    * milliseconds spent compiling them.
+    */
+  private final case class Codegen(compiles: Long, compileMs: Double) {
+    def -(o: Codegen): Codegen = Codegen(compiles - o.compiles, compileMs - o.compileMs)
+  }
+
+  private def codegenNow(): Codegen = Codegen(
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+
+  /** One benched query: median time, error (if any), the sorted raw
+    * per-rep timings (the spread; single-element for slow/err queries),
+    * and the codegen work of its timed reps (absent if the warm-up threw).
     */
   private final case class Timing(
-      name: String, median: Double, err: Option[String], reps: Vector[Double])
+      name: String, median: Double, err: Option[String], reps: Vector[Double],
+      codegen: Option[Codegen] = None)
 
   /** 2-significant-digit fixed-point rendering (no exponents, valid JSON
     * numbers): 0.42 / 1.2 / 11 / 123. Bounded width keeps ~85 entries
@@ -263,15 +284,17 @@ object Bench {
           val reps =
             if (warmSec > slowCutoffSec || n.startsWith("streaming_")) 1
             else 3
+          val before = codegenNow()
           val timed = Vector.fill(reps) {
             if (coldFamily(n)) dropAllCaches()
             runOnce(n)
           }
+          val codegen = Some(codegenNow() - before)
           timed.collectFirst { case (_, Some(err)) => err } match {
-            case Some(err) => Timing(n, -1.0, Some(err), Vector.empty)
+            case Some(err) => Timing(n, -1.0, Some(err), Vector.empty, codegen)
             case None =>
               val sorted = timed.map(_._1).sorted
-              Timing(n, sorted(sorted.size / 2), None, sorted)
+              Timing(n, sorted(sorted.size / 2), None, sorted, codegen)
           }
       }
       // Clear between QUERIES, not between reps: iterative queries persist
@@ -319,9 +342,9 @@ object Bench {
     def line(rs: Vector[Timing]): String = {
       val qs = rs.map(t => "\"" + t.name + "\":" + fmt2(t.median))
         .mkString("{", ",", "}")
-      val errs = rs.collect { case Timing(k, _, Some(e), _) =>
+      val errs = rs.collect { case Timing(k, _, Some(e), _, _) =>
         "\"" + k + "\":\"" + e + "\"" }.mkString("{", ",", "}")
-      val total = rs.collect { case Timing(_, v, None, _) => v }.sum
+      val total = rs.collect { case Timing(_, v, None, _, _) => v }.sum
       val errField = if (errs == "{}") "" else s""","errors":$errs"""
       s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","queries":$qs$errField,"peak_rss_mb":${peakRssMb()},"peak_heap_mb":${peakHeapMb()},"heap_floor_mb":$heapFloorPeakMb,"sf":$sf}"""
     }
@@ -330,20 +353,24 @@ object Bench {
     // artifact for humans and for cross-round noise-aware comparisons.
     val fullQs = results.map(t => "\"" + t.name + "\":" + t.median)
       .mkString("{", ",", "}")
-    val fullErrs = results.collect { case Timing(k, _, Some(e), _) =>
+    val fullErrs = results.collect { case Timing(k, _, Some(e), _, _) =>
       "\"" + k + "\":\"" + e + "\"" }.mkString("{", ",", "}")
-    val fullTotal = results.collect { case Timing(_, v, None, _) => v }.sum
+    val fullTotal = results.collect { case Timing(_, v, None, _, _) => v }.sum
     val spread = results.filter(_.reps.nonEmpty)
       .map(t => "\"" + t.name + "\":" + t.reps.mkString("[", ",", "]"))
       .mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$fullTotal,"unit":"sec","queries":$fullQs,"errors":$fullErrs,"spread":$spread,"peak_rss_mb":${peakRssMb()},"peak_heap_mb":${peakHeapMb()},"heap_floor_mb":$heapFloorPeakMb,"sf":$sf,"cpus":$cpus,"sfDir":"${jsonEscape(sfDir)}"}"""
+    val metrics = results.collect { case Timing(n, _, _, _, Some(c)) =>
+      f""""$n":{"codegen_compiles":${c.compiles},"codegen_compile_ms":${c.compileMs}%.1f}"""
+    }.mkString("{", ",", "}")
     // A filtered run (SPARK_GRAFT_ONLY) must never clobber the committed
     // full-inventory record — that exact mistake cost a round's bench
     // history once already. Partial runs write to bench_partial.json.
     val fullPath =
       if (only.isEmpty) "bench_full.json" else "bench_partial.json"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), full + "\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
+      full.stripSuffix("}") + s""","metrics":$metrics}""" + "\n")
 
     // The guarded final line: if the full inventory overflows the tail
     // window, shed the converged-mode extras first (their full numbers

@@ -16,8 +16,41 @@ import org.apache.spark.sql.SparkSession
   * size their state partitions by the bytes they replay, one per measured
   * 1 MiB ([[graft.streaming.StreamingReplay.statePartitions]]): 1 up to
   * sf0.01, 2 for the events replays at sf0.1.
+  *
+  * Codegen reuse: a generated class is compiled at most once per JVM.
+  * Spark caches compiled classes in one JVM-wide Guava cache keyed by
+  * (thread context classloader, generated source), which misses in two
+  * ways at Spark's defaults (measured on Spark 4.1.2, sf0.01, the 9
+  * perfbench queries interleaved in one local[4] JVM):
+  *  - Capacity. `spark.sql.codegen.cache.maxEntries` defaults to 100,
+  *    and Guava splits it over 4 segments of 25, each evicting on its
+  *    own. The 9 queries generate 115 distinct classes, so the cache
+  *    thrashes: every warm pass recompiled 31–67 of them (0.4–1.0 s of
+  *    Janino in a 3.8–5.2 s pass). [[CodegenCacheEntries]] holds them.
+  *  - Classloader. Each streaming drain runs in a cloned session, and
+  *    with artifact isolation on every session gets its own artifact
+  *    classloader, so every drain of `streaming_replay_hourly` recompiled
+  *    the same 11 classes (160–180 ms). Isolation only separates JARs and
+  *    files added to a session at runtime, which graft never adds, so it
+  *    is off.
+  *  - Class name. A whole-stage class is named after its codegen stage
+  *    id, and AQE numbers stages in the order they are planned, which
+  *    varies when independent shuffle stages race: each run of
+  *    `funnel_windowed` (three aggregates cross-joined) recompiled 2–8 of
+  *    its classes (sf0.001). With `useIdInClassName` off the name no
+  *    longer carries the id and the same source compiles once.
+  * With these confs the warm passes compile 0 classes, which
+  * `CodegenReuseSpec` pins.
   */
 object GraftSession {
+
+  /** Codegen cache capacity: 4 segments × 128 entries, so any one of
+    * Guava's segments alone holds the 115 distinct classes measured for
+    * the two perfbench workloads together, however their keys hash.
+    * Static: the first compile in the JVM fixes it.
+    */
+  val CodegenCacheEntries = 512
+
   def build(cpus: String, appName: String = "graft"): SparkSession = {
     val s = SparkSession
       .builder()
@@ -43,6 +76,9 @@ object GraftSession {
       // warnings through every bench/verify log; raise the cap instead.
       .config("spark.sql.debug.maxToStringFields", "1000")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

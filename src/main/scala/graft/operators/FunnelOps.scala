@@ -277,7 +277,7 @@ object FunnelOps {
        | SELECT (SELECT count(*) FROM v) AS n1,
        |  (SELECT count(*) FROM c) AS n2,
        |  (SELECT count(*) FROM p) AS n3)
-       |SELECT 1 AS stage, 'view' AS event_type, CAST(n1 AS BIGINT) AS users,
+       |SELECT CAST(1 AS BIGINT) AS stage, 'view' AS event_type, CAST(n1 AS BIGINT) AS users,
        | 1000 AS conversion_permille FROM n
        |UNION ALL
        |SELECT 2, 'click', CAST(n2 AS BIGINT),

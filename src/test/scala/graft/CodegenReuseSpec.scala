@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * codegen cache by (context classloader, generated source), so a warm
   * re-run of a query compiles nothing unless the cache evicted the class,
   * a streaming drain ran under a classloader of its own, or the generated
-  * source differs between executions (a literal that changes per run,
-  * say). Each of those shows up here as a compile on the second run.
+  * source differs between executions (a literal or a stage id that
+  * changes per run, say). Each of those shows up here as a compile on
+  * the second run.
   */
 class CodegenReuseSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -32,6 +33,12 @@ class CodegenReuseSpec extends AnyFunSuite {
   test("the session keeps one codegen cache that holds the working set") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "512")
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+  }
+
+  test("a second run of a query whose shuffle stages race compiles no class") {
+    run("funnel_windowed")
+    assert(compiles(run("funnel_windowed")) == 0)
   }
 
   for (replay <- Seq("streaming_replay_hourly", "streaming_sessions_state_replay"))
