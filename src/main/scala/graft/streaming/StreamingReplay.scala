@@ -574,7 +574,10 @@ object StreamingReplay {
         if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
           lit(SentinelUs * 1000L) // nanos flavor
         else timestamp_micros(lit(SentinelUs))
-      val sentinel = raw.limit(1).select(raw.schema.fields.toSeq.map { f =>
+      // One row of literals from `range(1)`, not `raw.limit(1)`: a limit's
+      // generated code names its counter from a JVM-wide sequence, so it
+      // would compile afresh on every drain.
+      val sentinel = s.range(1).select(raw.schema.fields.toSeq.map { f =>
         (f.name match {
           case "ts" => tsLit
           case "event_id" | "user_id" => lit(-1L)

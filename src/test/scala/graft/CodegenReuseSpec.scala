@@ -41,7 +41,8 @@ class CodegenReuseSpec extends AnyFunSuite {
     assert(compiles(run("funnel_windowed")) == 0)
   }
 
-  for (replay <- Seq("streaming_replay_hourly", "streaming_sessions_state_replay"))
+  for (replay <- Seq("streaming_replay_hourly", "streaming_sessions_state_replay",
+      "streaming_sessionize_replay"))
     test(s"a second drain of $replay compiles no class") {
       run(replay)
       assert(compiles(run(replay)) == 0)
