@@ -19,18 +19,19 @@ import org.apache.spark.sql.SparkSession
   *
   * Codegen reuse: a generated class is compiled at most once per JVM.
   * Spark caches compiled classes in one JVM-wide Guava cache keyed by
-  * (thread context classloader, generated source), which misses in two
-  * ways at Spark's defaults (measured on Spark 4.1.2, sf0.01, the 9
-  * perfbench queries interleaved in one local[4] JVM):
+  * (thread context classloader, generated source). At Spark's defaults
+  * it misses three ways (measured on Spark 4.1.2, local[4]):
   *  - Capacity. `spark.sql.codegen.cache.maxEntries` defaults to 100,
   *    and Guava splits it over 4 segments of 25, each evicting on its
-  *    own. The 9 queries generate 115 distinct classes, so the cache
-  *    thrashes: every warm pass recompiled 31–67 of them (0.4–1.0 s of
-  *    Janino in a 3.8–5.2 s pass). [[CodegenCacheEntries]] holds them.
+  *    own. The 9 perfbench queries, interleaved in one JVM at sf0.01,
+  *    generate 115 distinct classes, so the cache thrashed: every warm
+  *    pass recompiled 31–67 of them (0.4–1.0 s of Janino in a 3.8–5.2 s
+  *    pass), and the `scan_agg` workload alone recompiled 13–26 per pass
+  *    (0.17–0.41 s). [[CodegenCacheEntries]] holds them.
   *  - Classloader. Each streaming drain runs in a cloned session, and
-  *    with artifact isolation on every session gets its own artifact
+  *    with artifact isolation on, every session gets its own artifact
   *    classloader, so every drain of `streaming_replay_hourly` recompiled
-  *    the same 11 classes (160–180 ms). Isolation only separates JARs and
+  *    the same 11 classes (130–185 ms). Isolation only separates JARs and
   *    files added to a session at runtime, which graft never adds, so it
   *    is off.
   *  - Class name. A whole-stage class is named after its codegen stage
@@ -38,18 +39,19 @@ import org.apache.spark.sql.SparkSession
   *    varies when independent shuffle stages race: each run of
   *    `funnel_windowed` (three aggregates cross-joined) recompiled 2–8 of
   *    its classes (sf0.001). With `useIdInClassName` off the name no
-  *    longer carries the id and the same source compiles once.
-  * With these confs the warm passes compile 0 classes, which
-  * `CodegenReuseSpec` pins.
+  *    longer carries the id, and the same source compiles once.
+  * With these confs a warm pass compiles 0 classes, which
+  * `CodegenReuseSpec` pins; `scan_agg`'s summed per-query medians fell
+  * from 2.85 to 2.36 s (11 alternating perfbench runs per side).
   */
 object GraftSession {
 
   /** Codegen cache capacity: 4 segments × 128 entries, so any one of
     * Guava's segments alone holds the 115 distinct classes measured for
-    * the two perfbench workloads together, however their keys hash.
-    * Static: the first compile in the JVM fixes it.
+    * the two perfbench workloads together, however their keys hash. A
+    * static conf: the first compile in the JVM fixes it.
     */
-  val CodegenCacheEntries = 512
+  private val CodegenCacheEntries = 512
 
   def build(cpus: String, appName: String = "graft"): SparkSession = {
     val s = SparkSession

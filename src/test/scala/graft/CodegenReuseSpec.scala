@@ -30,7 +30,7 @@ class CodegenReuseSpec extends AnyFunSuite {
     Registry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
   }
 
-  test("the session keeps one codegen cache that holds the working set") {
+  test("the session sizes the codegen cache, shares it with drains, drops stage ids") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "512")
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
     assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
