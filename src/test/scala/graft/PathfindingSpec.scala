@@ -4,18 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{AudienceOps, GraphOps, SampleOps}
 
-/** Differential checks for BFS/SSSP, the A/B readout, and the Gini
+/** Differential checks for BFS/SSSP, the landmark BFS, the A/B readout, and the Gini
   * diversity audit at sf0.001 against naive recomputes.
   */
 class PathfindingSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val sf = TestSession.sf
 
-  private def relaxNaive(
-      edges: Seq[(Long, Long, Long)], rounds: Int): Map[Long, Long] = {
+  /** Round-bounded min-plus relaxation of the symmetrized `edges`
+    * (src, dst, cost) from distance 0 at every node of `seeds`.
+    */
+  private def relaxNaive(edges: Seq[(Long, Long, Long)], seeds: Set[Long],
+      rounds: Int): Map[Long, Long] = {
     val sym = edges ++ edges.map(e => (e._2, e._1, e._3))
-    var dist = sym.flatMap(e => Seq(e._1, e._2)).distinct
-      .filter(_ % 97 == 0).map(_ -> 0L).toMap
+    var dist = seeds.map(_ -> 0L).toMap
     for (_ <- 1 to rounds) {
       val relaxed = sym.flatMap { case (a, b, c) =>
         dist.get(a).map(d => b -> (d + c))
@@ -28,10 +30,17 @@ class PathfindingSpec extends AnyFunSuite {
     dist
   }
 
+  private def nodesOf(edges: Seq[(Long, Long, Long)]): Seq[Long] =
+    edges.flatMap(e => Seq(e._1, e._2)).distinct
+
+  /** The seed cohort of [[GraphOps.bfsHops]] and [[GraphOps.ssspWeighted]]. */
+  private def cohort(edges: Seq[(Long, Long, Long)]): Set[Long] =
+    nodesOf(edges).filter(_ % 97 == 0).toSet
+
   test("bfs hops matches naive round-bounded relaxation") {
     val es = GraphOps.edges(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), 1L))
-    val want = relaxNaive(es, 6)
+    val want = relaxNaive(es, cohort(es), 6)
     val got = GraphOps.bfsHops(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
@@ -53,13 +62,29 @@ class PathfindingSpec extends AnyFunSuite {
     val es = pairs.groupBy(identity).map { case ((a, b), dup) =>
       (a, b, 1000000L / dup.size)
     }.toSeq
-    val want = relaxNaive(es, 6)
+    val want = relaxNaive(es, cohort(es), 6)
     val got = GraphOps.ssspWeighted(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
     // Weighted distances refine BFS: any reached node is BFS-reachable.
     val hops = GraphOps.bfsHops(spark, sf).collect().map(_.getLong(0)).toSet
     assert(got.keySet == hops)
+  }
+
+  test("harmonic centrality matches a naive BFS from each landmark") {
+    val es = GraphOps.edges(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), 1L)).toSeq
+    // The 8 lowest node ids, 4 rounds each; a landmark's own row is out.
+    val reached = nodesOf(es).sorted.take(8)
+      .flatMap(seed => relaxNaive(es, Set(seed), 4))
+      .filter(_._2 > 0L)
+    val want = reached.groupBy(_._1).map { case (node, hs) =>
+      node -> (hs.size.toLong, hs.map(h => 1000000L / h._2).sum)
+    }
+    val got = GraphOps.harmonicCentrality(spark, sf).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == want)
+    assert(want.values.exists(_._1 > 1L))
   }
 
   test("ab metrics match a naive arm split") {

@@ -336,18 +336,17 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def countJobs(op: => Unit): Int = TestSession.countJobs(op)
 
-  test("bfs_hops spends one aggregate exchange and one checkpoint per round") {
-    val n = countJobs(graft.operators.GraphOps.bfsHops(spark, sf).collect())
-    // Measured healthy shape: 27 jobs — AQE runs each query stage as its
-    // own job, so a round's checkpoint (broadcast build + aggregate map +
-    // finalize) books ~4, plus setup and the final collect. One blocking
-    // action per round is the invariant; a restored per-round scalar
-    // poll or a reintroduced full-outer carry adds 6-12 PER ROUND. The
-    // ceiling sits between the healthy shape and the known-bad one
-    // (~63+) with headroom for AQE stage-to-job mapping drift across
-    // Spark versions/core counts — this guards the regression class,
-    // not the exact count.
-    assert(n <= 45, s"bfs_hops ran $n jobs for 6 rounds")
+  /** Count each (name, ceiling, run) entry's jobs from a cleared cache and
+    * fail with every entry that ran more than its ceiling.
+    */
+  private def assertCeilings(family: Seq[(String, Int, () => Any)]): Unit = {
+    val over = family.flatMap { case (name, ceiling, run) =>
+      spark.catalog.clearCache()
+      val n = countJobs(run())
+      info(s"$name jobs: $n (ceiling $ceiling)")
+      if (n > ceiling) Some(s"$name ran $n jobs > $ceiling") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 
   test("mst_forest contracts with O(1) driver actions per round") {
@@ -390,13 +389,7 @@ class PlanShapeSpec extends AnyFunSuite {
         () => AssocOps.entityClustersConverged(spark, sf)._2.collect()),
       ("triangle_count", 4,
         () => GraphOps.triangleCount(spark, sf).collect()))
-    val over = family.flatMap { case (name, ceiling, run) =>
-      spark.catalog.clearCache()
-      val n = countJobs(run())
-      info(s"$name jobs: $n (ceiling $ceiling)")
-      if (n > ceiling) Some(s"$name ran $n jobs > $ceiling") else None
-    }
-    assert(over.isEmpty, over.mkString("; "))
+    assertCeilings(family)
   }
 
   test("rank, LPA and k-core families spend no more jobs than their measured loop shape") {
@@ -426,13 +419,34 @@ class PlanShapeSpec extends AnyFunSuite {
       ("kcore", 18, () => GraphOps.kcore(spark, sf, 60, 4).collect()),
       ("kcore_conv", 16,
         () => GraphOps.kcoreConverged(spark, sf)._2.collect()))
-    val over = family.flatMap { case (name, ceiling, run) =>
-      spark.catalog.clearCache()
-      val n = countJobs(run())
-      info(s"$name jobs: $n (ceiling $ceiling)")
-      if (n > ceiling) Some(s"$name ran $n jobs > $ceiling") else None
+    assertCeilings(family)
+  }
+
+  test("frontier family spends no more jobs than its measured loop shape") {
+    import graft.operators.GraphOps
+    GraphOps.edges(spark, sf)
+    // Ceilings are the max of three cold runs. Per round: a broadcast of
+    // the frontier, the min-combine aggregation and its checkpoint, plus
+    // setup (edge layout, node count) and the final collect. A restored
+    // per-round scalar poll or a full-outer carry adds 6-12 jobs PER
+    // ROUND. The landmark store is kept per JVM and table directory, so
+    // its consumers run on a fresh copy of the tables with a warm edge
+    // store: graph_distance_histogram first builds it (the landmark BFS),
+    // then reads it; betweenness_landmark reads it for its hop levels.
+    TestSession.withTableCopy(sf) { copy =>
+      GraphOps.edges(spark, copy)
+      assertCeilings(Seq(
+        ("bfs_hops", 27, () => GraphOps.bfsHops(spark, sf).collect()),
+        ("sssp_weighted", 30, () => GraphOps.ssspWeighted(spark, sf).collect()),
+        ("harmonic_centrality", 23,
+          () => GraphOps.harmonicCentrality(spark, sf).collect()),
+        ("graph_distance_histogram, store cold", 26,
+          () => GraphOps.graphDistanceHistogram(spark, copy).collect()),
+        ("graph_distance_histogram, store warm", 5,
+          () => GraphOps.graphDistanceHistogram(spark, copy).collect()),
+        ("betweenness_landmark", 41,
+          () => GraphOps.betweennessLandmark(spark, copy).collect())))
     }
-    assert(over.isEmpty, over.mkString("; "))
   }
 
   test("capped dedup shuffles 8-byte shingle hashes, never shingle strings") {

@@ -29,4 +29,20 @@ object TestSession {
     } finally spark.sparkContext.removeSparkListener(listener)
     jobs.get()
   }
+
+  /** Run `body` on a fresh temp copy of the table files in `dir`, deleted
+    * afterwards. The artifact stores are keyed by directory, so theirs
+    * start cold in the copy.
+    */
+  def withTableCopy[T](dir: String)(body: String => T): T = {
+    val copy = java.nio.file.Files.createTempDirectory("graft-table-copy")
+    try {
+      new java.io.File(dir).listFiles.foreach(f =>
+        java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
+      body(copy.toString)
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(copy.toString)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
 }
