@@ -1,7 +1,8 @@
 package graft.operators
 
 import scala.annotation.tailrec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, min}
 
 /** The round driver of the node-frame loops: PageRank with its weighted,
   * converged and personalized twins, LPA, k-core and the distributed
@@ -9,7 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * node (a score, a label, a survivor flag) against a cached edge frame.
   * A caller supplies that edge frame, laid out and cached, the round body
   * and, converged, the stop test; the node set, its count and the
-  * broadcast and checkpoint policy live here, once.
+  * broadcast and checkpoint policy live here, once. The frontier loops
+  * (BFS, SSSP, the landmark BFS) iterate a sparse distance frame instead
+  * and share one round body, [[relax]].
   *
   * Edges and nodes. `edges` has `src` and `dst` columns. Callers
   * hash-partition the cached edges by the round's aggregation key (`dst`
@@ -69,16 +72,49 @@ private[graft] final class NodeLoop(
   lazy val count: Long = nodes.count()
   val n: Option[Long] = if (sizeGuard) Some(count) else None
 
-  def side(df: DataFrame): DataFrame = n.fold(df)(GraphOps.roundSide(df, _))
-  def checkpoint(df: DataFrame): DataFrame =
-    n.fold(GraphOps.truncate(s, df))(GraphOps.narrowTruncate(s, df, _))
+  def side(df: DataFrame): DataFrame = sideAt(n)(df)
+  def checkpoint(df: DataFrame): DataFrame = checkpointAt(n)(df)
+
+  /** [[side]] and [[checkpoint]] for a frame of at most `rows` rows. */
+  private def sideAt(rows: Option[Long])(df: DataFrame): DataFrame =
+    rows.fold(df)(GraphOps.roundSide(df, _))
+  private def checkpointAt(rows: Option[Long])(df: DataFrame): DataFrame =
+    rows.fold(GraphOps.truncate(s, df))(GraphOps.narrowTruncate(s, df, _))
 
   /** `rounds` rounds of `round` from `init`. */
   def fixed(init: DataFrame, rounds: Int)(round: DataFrame => DataFrame): DataFrame =
+    fixedAt(n)(init, rounds)(round)
+
+  private def fixedAt(rows: Option[Long])(init: DataFrame, rounds: Int)(
+      round: DataFrame => DataFrame): DataFrame =
     (1 to rounds).foldLeft(init) { (frame, i) =>
       val next = round(frame)
-      if (i < rounds) checkpoint(next) else next
+      if (i < rounds) checkpointAt(rows)(next) else next
     }
+
+  /** [[fixed]] rounds of frontier relaxation from the seed frame `init`,
+    * whose columns are `node`, any extra keys, then the distance. A round
+    * relaxes every edge out of the frame, `dst` taking the keys and `step`
+    * (an expression over the frame's and the edge's columns) as its
+    * distance, and keeps the min distance per node and keys over the
+    * frame and the relaxed rows: one union and one min aggregation, not a
+    * full outer join of the old frame with the relaxed one, so the round
+    * has one (map-side combined) aggregation exchange. Nodes no seed
+    * reaches stay out of the frame. The frame holds at most `perNode` rows
+    * per node (1, or one per landmark), so `perNode` × the node count is
+    * the row bound of the broadcast and checkpoint guard.
+    */
+  def relax(init: DataFrame, rounds: Int, perNode: Long)(step: Column): DataFrame = {
+    val rows = n.map(_ * perNode)
+    val keys = init.columns.slice(1, init.columns.length - 1).toSeq
+    val dist = init.columns.last
+    fixedAt(rows)(init, rounds) { frame =>
+      frame.union(edges
+        .join(sideAt(rows)(frame.withColumnRenamed("node", "src")), "src")
+        .select(col("dst").as("node") +: keys.map(col) :+ step.as(dist): _*))
+        .groupBy("node", keys: _*).agg(min(dist).as(dist))
+    }
+  }
 
   /** Rounds of `round` from `init` until `stable` holds on a round's
     * checkpointed frame, at most `maxRounds`; (rounds run, last frame).

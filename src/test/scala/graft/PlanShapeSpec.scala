@@ -425,8 +425,9 @@ class PlanShapeSpec extends AnyFunSuite {
   test("frontier family spends no more jobs than its measured loop shape") {
     import graft.operators.GraphOps
     GraphOps.edges(spark, sf)
-    // Ceilings are the max of three cold runs. Per round: a broadcast of
-    // the frontier, the min-combine aggregation and its checkpoint, plus
+    // Ceilings are the max of three cold runs (all three identical). Per
+    // round (NodeLoop.relax): a broadcast of the frontier, the min-combine
+    // aggregation and its checkpoint (every round but the last), plus
     // setup (edge layout, node count) and the final collect. A restored
     // per-round scalar poll or a full-outer carry adds 6-12 jobs PER
     // ROUND. The landmark store is kept per JVM and table directory, so
@@ -436,11 +437,11 @@ class PlanShapeSpec extends AnyFunSuite {
     TestSession.withTableCopy(sf) { copy =>
       GraphOps.edges(spark, copy)
       assertCeilings(Seq(
-        ("bfs_hops", 27, () => GraphOps.bfsHops(spark, sf).collect()),
-        ("sssp_weighted", 30, () => GraphOps.ssspWeighted(spark, sf).collect()),
-        ("harmonic_centrality", 23,
+        ("bfs_hops", 26, () => GraphOps.bfsHops(spark, sf).collect()),
+        ("sssp_weighted", 29, () => GraphOps.ssspWeighted(spark, sf).collect()),
+        ("harmonic_centrality", 22,
           () => GraphOps.harmonicCentrality(spark, sf).collect()),
-        ("graph_distance_histogram, store cold", 26,
+        ("graph_distance_histogram, store cold", 25,
           () => GraphOps.graphDistanceHistogram(spark, copy).collect()),
         ("graph_distance_histogram, store warm", 5,
           () => GraphOps.graphDistanceHistogram(spark, copy).collect()),

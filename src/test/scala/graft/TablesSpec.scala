@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *      forces resolution without executing) at sf0.001.
   * It also pins the cached read schemas: a warm table or artifact-store
   * read runs no Spark job, yet serves exactly the schema an inferring
-  * read would, and a rewritten table is read with its new columns.
+  * read would, and a rewritten table is read with its new columns and
+  * rebuilds the artifacts built from it.
   */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -114,6 +115,29 @@ class TablesSpec extends AnyFunSuite {
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir.toString)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  test("the landmark store rebuilds when lineitem is rewritten") {
+    import graft.operators.GraphOps
+    // Half the orders: a smaller co-purchase graph, fewer landmark pairs.
+    def halve(dir: String): Unit =
+      Tables.lineitem(spark, sf).filter("l_orderkey % 2 = 0")
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    // Both consumers of the landmark store.
+    def landmarks(dir: String) = (
+      GraphOps.graphDistanceHistogram(spark, dir).collect().toSeq,
+      GraphOps.betweennessLandmark(spark, dir).collect().toSeq)
+    TestSession.withTableCopy(sf) { rewritten =>
+      val before = landmarks(rewritten)
+      halve(rewritten)
+      val after = landmarks(rewritten)
+      TestSession.withTableCopy(sf) { fresh =>
+        halve(fresh)
+        val want = landmarks(fresh)
+        assert(want._1 != before._1 && want._2 != before._2)
+        assert(after == want, "the landmark store served the pre-rewrite frame")
+      }
     }
   }
 
